@@ -22,25 +22,7 @@ import sys
 import tempfile
 import time
 
-
-def _mk_spark(cores: int, app: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPLADE_SPARK_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+from bench import _mk_spark
 
 
 SUITE = [

@@ -49,10 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     bp.add_argument("--codec", choices=["varint", "for"], default="varint",
                     help="posting delta codec: LEB128 varint or "
                          "fixed-width FOR bitpack (faster decode)")
-    bp.add_argument("--streaming-encoder", action="store_true",
-                    help="bounded-memory streaming encode (JVM sort + "
-                         "cross-batch carry) instead of the default "
-                         "python-side partition lexsort")
 
     qp = sub.add_parser("query", help="top-k BM25 retrieval")
     qp.add_argument("--index", default=None, help="parquet index dir")
@@ -216,7 +212,6 @@ def main(argv: list[str] | None = None) -> int:
                     "avgdl": avgdl,
                 },
                 codec=args.codec,
-                local_sort=not args.streaming_encoder,
             )
         # doc_map dim table for external-id emission
         docs.select("doc_id", "conv_id").write.mode("overwrite").parquet(
@@ -253,9 +248,9 @@ def main(argv: list[str] | None = None) -> int:
         qt = query_term_freqs(queries).select("query_id", "term_id", "qtf").toPandas()
         t0 = time.time()
         # num_shards from the meta kills an extra max(shard_id) Spark job
-        # (a full postings scan) per query batch; merge='auto' picks the
-        # driver-side top-k merge (one fewer Spark stage) whenever the
-        # collected row bound allows (policy lives in query.wand)
+        # (a full postings scan) per query batch; retrieve's merge policy
+        # takes the driver-side top-k merge (one fewer Spark stage) whenever
+        # the collected row bound allows
         runs = retrieve(
             postings,
             qt,
@@ -265,7 +260,6 @@ def main(argv: list[str] | None = None) -> int:
             num_shards=meta["num_shards"],
             bits=meta.get("bits", 8),
             codec=meta.get("codec", "varint"),
-            merge="auto",
         )
         write_runs_parquet(runs, args.out)
         _log(f"query: k={args.k} wall={time.time() - t0:.2f}s → {args.out}")

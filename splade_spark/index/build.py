@@ -16,7 +16,7 @@ as per-term arrays (:86-88). Spark-native redesign:
   shards partition docID space.
 - Within a (shard, term) group, postings are docID-sorted and cut into
   128-entry blocks, delta+varint docIDs, u8-quantized weights, integer
-  block_max (codec.py) — one Arrow grouped-map UDF, numpy-vectorized.
+  block_max (codec.py) — one Arrow map UDF per partition, numpy-vectorized.
 - Output is a parquet table partitioned by shard_id (Iceberg-ready: same
   layout via `writeTo(...).partitionedBy(shard_id)`), with per-shard
   checkpoint ledger entries carrying lineage + postings/sec metrics, so a
@@ -31,12 +31,9 @@ makes per-shard writes idempotent.
 from __future__ import annotations
 
 import json
-
 import os
 import time
 
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,43 +58,25 @@ def build_postings(
     num_shards: int = 32,
     block_size: int = BLOCK_SIZE,
     bits: int = 8,
-    local_sort: bool = True,
     codec: str = "varint",
-    prequantize: bool = False,
 ) -> DataFrame:
     """(doc_id, term_id, weight) → compressed posting blocks.
 
     One shuffle — repartition on (shard_id, term_id) — then one vectorized
-    Arrow encoder (mapInPandas) whose batches cover ALL the partition's
-    (shard, term) groups (codec.encode_groups). A grouped-map per
-    (shard, term) is wrong at scale in both directions: Zipf tails make
-    millions of tiny groups (per-group pandas overhead dominates), and a
-    per-shard grouping would buffer whole shards in memory.
+    Arrow encoder (mapInArrow) that takes the partition's (shard, term)
+    groups in one encode_groups pass. A grouped-map per (shard, term) is
+    wrong at scale in both directions: Zipf tails make millions of tiny
+    groups (per-group pandas overhead dominates), and a per-shard grouping
+    would buffer whole shards in memory.
 
-    prequantize=True: quantize the weight JVM-side BEFORE the shuffle —
-    ``least(hi, greatest(0, bround(w*scale)))`` cast to int, exactly
-    quantize_weights' rint-then-clip (F.bround is HALF_EVEN like np.rint;
-    asserted byte-identical to the float path in test_index_build). The
-    engine's central shuffle then carries a low-entropy int32 instead of
-    a float64. Measured on this box (42M postings, local[16]): ~5-9%
-    SLOWER — the extra JVM expression eval costs more than the 4-of-28
-    bytes saved in a memory-local shuffle — so the float path stays the
-    default; the knob exists for network-shuffle clusters where shuffle
-    bytes, not map-side CPU, are the constraint.
-
-    local_sort=True (default): rows are sorted *inside the Python worker*
-    (np.lexsort over the buffered partition) instead of with Spark's
-    sortWithinPartitions. Measured head-to-head at 42M postings, the JVM
-    row sort + sorted-row→Arrow conversion is the scaling bottleneck of
-    the whole build (shared-JVM sort/GC contention: 4→16 core efficiency
-    0.53 vs 0.84 for the Python sort at equal full-width throughput).
-    Memory is O(partition): size the partition count so partitions hold
-    ~8–32M rows (spark.sql.shuffle.partitions, or defaultParallelism).
-
-    local_sort=False: Spark sorts (shard, term, doc) within partitions and
-    a streaming encoder carries the trailing possibly-incomplete group
-    across batches — memory O(arrow batch + one group) regardless of
-    partition size; use it when partitions can't be bounded.
+    Rows are sorted *inside the Python worker* (np.lexsort over the
+    buffered partition), not with Spark's sortWithinPartitions. Measured
+    head-to-head at 42M postings, the JVM row sort + sorted-row→Arrow
+    conversion was the scaling bottleneck of the whole build (shared-JVM
+    sort/GC contention: 4→16 core efficiency 0.53 vs 0.84 for the Python
+    sort at equal full-width throughput). Memory is O(partition): size the
+    partition count so partitions hold ~8–32M rows
+    (spark.sql.shuffle.partitions, or defaultParallelism).
     """
 
     def encode_partition(batches):
@@ -123,7 +102,6 @@ def build_postings(
         g = encode_groups(
             s[o], t[o], d[o], w[o], scale,
             block_size=block_size, bits=bits, codec=codec,
-            prequantized=prequantize,
         )
         yield pa.RecordBatch.from_arrays(
             [
@@ -143,62 +121,6 @@ def build_postings(
             ],
         )
 
-    def encode_stream(batches):
-        import numpy as np
-
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            s = pdf["shard_id"].to_numpy()
-            t = pdf["term_id"].to_numpy()
-            same_tail = (s == s[-1]) & (t == t[-1])
-            not_tail = np.flatnonzero(~same_tail)
-            cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
-            pending = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield pd.DataFrame(
-                    encode_groups(
-                        body["shard_id"].to_numpy(),
-                        body["term_id"].to_numpy(),
-                        body["doc_id"].to_numpy(),
-                        body["weight"].to_numpy(),
-                        scale,
-                        block_size=block_size,
-                        bits=bits,
-                        codec=codec,
-                        prequantized=prequantize,
-                    )
-                )
-        if pending is not None and len(pending):
-            yield pd.DataFrame(
-                encode_groups(
-                    pending["shard_id"].to_numpy(),
-                    pending["term_id"].to_numpy(),
-                    pending["doc_id"].to_numpy(),
-                    pending["weight"].to_numpy(),
-                    scale,
-                    block_size=block_size,
-                    bits=bits,
-                    codec=codec,
-                    prequantized=prequantize,
-                )
-            )
-
-    sharded = with_shard(weights, num_shards)
-    if prequantize:
-        hi_q = float(2**bits - 1)
-        sharded = sharded.withColumn(
-            "weight",
-            F.least(
-                F.lit(hi_q),
-                F.greatest(F.lit(0.0), F.bround(F.col("weight") * F.lit(float(scale)))),
-            ).cast("int"),
-        )
     # explicit partition count — AQE's coalescePartitions would shrink this
     # CPU-bound encode stage to a handful of partitions based on shuffle
     # bytes alone; user-specified repartition(N) is exempt from coalescing
@@ -207,15 +129,12 @@ def build_postings(
         int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
         spark.sparkContext.defaultParallelism * 2,
     )
-    if local_sort:
-        arranged = sharded.repartition(n_part, "shard_id", "term_id")
-        return arranged.select(
-            "shard_id", "term_id", "doc_id", "weight"
-        ).mapInArrow(encode_partition, schema=POSTINGS_SCHEMA)
-    arranged = sharded.repartition(n_part, "shard_id", "term_id").sortWithinPartitions(
-        "shard_id", "term_id", "doc_id"
+    arranged = with_shard(weights, num_shards).repartition(
+        n_part, "shard_id", "term_id"
     )
-    return arranged.mapInPandas(encode_stream, schema=POSTINGS_SCHEMA)
+    return arranged.select(
+        "shard_id", "term_id", "doc_id", "weight"
+    ).mapInArrow(encode_partition, schema=POSTINGS_SCHEMA)
 
 
 def _ledger_dir(path: str) -> str:
@@ -263,13 +182,11 @@ def build_index(
     lineage: dict | None = None,
     bits: int = 8,
     codec: str = "varint",
-    local_sort: bool = True,
 ) -> dict:
     """Resumable sharded index build → parquet at `path`, partitioned by
     shard_id, plus a per-shard checkpoint ledger with lineage + metrics.
-    local_sort=False selects the bounded-memory streaming encoder (see
-    build_postings) for deployments where partitions can't be sized to
-    fit worker memory.
+    Encoding is build_postings' one Arrow encoder (worker-side lexsort,
+    memory O(partition)).
 
     Returns build metrics {built_shards, skipped_shards, postings, elapsed_s,
     postings_per_sec}. Re-running after a kill only builds missing shards
@@ -335,7 +252,6 @@ def build_index(
         block_size=block_size,
         bits=bits,
         codec=codec,
-        local_sort=local_sort,
     )
     # Range-repartition the (small) encoded blocks so each shard writes ~one
     # term-sorted file: without this, encode_partitions × shards files get

@@ -247,8 +247,9 @@ def encode_groups(
 ) -> dict[str, list]:
     """Encode MANY (shard, term) posting groups in one vectorized pass.
 
-    Input arrays must be sorted by (shard, term, doc) — the build shuffle's
-    sortWithinPartitions guarantees this. Group/block boundaries, deltas,
+    Input arrays must be sorted by (shard, term, doc) — the build encoder's
+    worker-side np.lexsort (and the segment merge's sortWithinPartitions)
+    guarantees this. Group/block boundaries, deltas,
     varint packing, and block maxima are all computed with cumsum/reduceat;
     the only Python loop slices the shared byte buffers per block (cheap).
     This replaces a per-group applyInPandas, whose per-group pandas overhead
@@ -273,9 +274,10 @@ def encode_groups(
         }
     doc = np.asarray(doc, dtype=np.int64)
     if prequantized:
-        # weights arrived as integers already rint'ed+clipped JVM-side
-        # (build_postings prequantize path) — same value domain as
-        # quantize_weights, asserted byte-identical in test_index_build
+        # weights arrived as integers already rint'ed+clipped (the segment
+        # merge re-encodes decoded quantized weights) — same value domain as
+        # quantize_weights, asserted byte-identical by the segment-merge ≡
+        # full-build test
         check_bits(bits)
         q = np.asarray(weight).astype(np.uint8 if bits <= 8 else np.uint16)
     else:

@@ -14,7 +14,7 @@ rows), repartition by (shard, term) + sortWithinPartitions(shard, term,
 first_doc), then a *streaming* mapInPandas that decodes, concatenates by
 docID and re-encodes every complete (shard, term) group per Arrow batch,
 carrying the trailing possibly-incomplete group into the next batch — the
-same carry-the-tail shape as the build encoder (build.py:encode_stream).
+same encode_groups kernel as the build encoder (build.py:build_postings).
 A per-group applyInPandas is wrong here for the same reason it was wrong
 in the build: Zipf tails create millions of tiny (shard, term) groups and
 per-group pandas overhead dominates. Because shards partition docID space

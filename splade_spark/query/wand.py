@@ -7,7 +7,7 @@ design: the index is document-sharded (index/build.py), so retrieval is
 
     postings ⋈ broadcast(query terms)        -- term pruning, broadcast join
       → groupBy(shard_id).applyInPandas(kernel)  -- per-shard top-k
-      → window top-k merge                    -- global (score desc, doc asc)
+      → bounded top-k merge (driver/window)   -- global (score desc, doc asc)
 
 The kernel scores in the *integer* quantized-impact domain (exact in int64),
 so per-shard results and the final merge are bit-deterministic and
@@ -25,7 +25,6 @@ Python). Skipped intervals' blocks are never decoded.
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 import numpy as np
@@ -37,24 +36,19 @@ from ..index.codec import check_bits, decode_block_raw
 
 CHUNK = 32  # intervals scored in the FIRST refinement round
 CHUNK_MAX = 512  # cap for the geometrically-growing later rounds
-# merge='auto' collects per-shard top-k driver-side only below this bound on
+# retrieve collects per-shard top-k driver-side only up to this bound on
 # n_queries × k × num_shards. 400k is the measured crossover on the bench
 # shape (32 shards, k=10): below it the driver merge saves a Spark stage;
 # above it the collect + re-upload costs more than the distributed window
 # merge — and the collect is a serial driver cost that no executor count
 # amortizes, so large batches should stay distributed on clusters too.
-# Env-overridable for drivers sized differently.
-DRIVER_MERGE_MAX_ROWS = int(
-    os.environ.get("SPLADE_DRIVER_MERGE_MAX_ROWS", "400000")
-)
+DRIVER_MERGE_MAX_ROWS = 400_000
 # byte budget for one kernel invocation's decoded-block cache (per shard
 # group, per query batch). Without a bound, a batch whose term union touches
 # most of the vocabulary asymptotically holds the shard's whole decompressed
 # posting set in Python memory; eviction only costs a re-decode, so results
 # are identical at any budget.
-DECODE_CACHE_BYTES = int(
-    os.environ.get("SPLADE_DECODE_CACHE_BYTES", str(1 << 30))
-)
+DECODE_CACHE_BYTES = 1 << 30
 
 
 class _BlockCache:
@@ -266,9 +260,8 @@ def retrieve(
     num_shards: int | None = None,
     bits: int = 8,
     codec: str = "varint",
-    merge: str = "window",
+    merge: str = "auto",
     prepartitioned: bool = False,
-    force_driver_merge: bool = False,
 ) -> DataFrame:
     """Top-k BM25 over a block-compressed sharded index.
 
@@ -277,24 +270,25 @@ def retrieve(
     ``bm25.bm25_topk`` on integer-quantized weights.
 
     num_shards: pass the value from _index_meta.json — when omitted, an
-    extra max(shard_id) Spark job runs per batch (a full postings-scan in
-    a query-serving loop). bits: quantization width from the same meta
-    (u8/u16 weight bytes decode differently; a mismatch is garbage scores).
+    extra max(shard_id) Spark job runs per batch (a term-filtered postings
+    scan in a query-serving loop) before the merge is chosen. bits:
+    quantization width from the same meta (u8/u16 weight bytes decode
+    differently; a mismatch is garbage scores).
 
-    merge: 'window' runs the global (score desc, doc asc) top-k as a Spark
-    window job — fully distributed, use for huge query batches. 'driver'
-    collects the per-shard top-k (≤ k×num_shards tiny rows per query) and
-    merges on the driver — one fewer Spark stage per batch, the serving
-    path for interactive/small batches (the reference's mono-CPU latency
-    protocol analogue, efficient_splade_pisa/README.md:47-59). Identical
-    results by construction: both orders are (score_int desc, doc_id asc)
-    over the same shard-local integer scores. 'auto' picks driver when the
-    collected row bound n_queries × k × num_shards stays under
-    DRIVER_MERGE_MAX_ROWS (default 400k — the measured crossover where
-    collect + re-upload starts losing to the window merge, and a serial
-    driver-side cost no executor count amortizes) — the bound
-    must cap that product, not the query count alone: 1000 queries × k=100
-    × 4096 shards would be 410M driver rows.
+    merge: the global (score desc, doc asc) top-k over the per-shard
+    top-k. A driver merge collects up to n_queries × k × num_shards rows
+    and never runs when that product exceeds DRIVER_MERGE_MAX_ROWS (400k,
+    the measured crossover where collect + re-upload starts losing to the
+    distributed merge, and a serial driver-side cost no executor count
+    amortizes) — the bound caps that product, not the query count alone:
+    1000 queries × k=100 × 4096 shards would be 410M driver rows. 'auto' (default) merges
+    on the driver within the bound — one fewer Spark stage per batch, the
+    serving path for interactive/small batches (the reference's mono-CPU
+    latency protocol analogue, efficient_splade_pisa/README.md:47-59) —
+    and as a Spark window job above it. 'driver' demands the driver merge
+    and raises over the bound; 'window' always runs the window job.
+    Identical results by construction: both orders are (score_int desc,
+    doc_id asc) over the same shard-local integer scores.
 
     prepartitioned: postings came from ``prepare_serving`` (already
     shuffled by shard_id) — skip the per-batch repartition; the term
@@ -313,32 +307,6 @@ def retrieve(
         qpdf = query_terms[["query_id", "term_id", "qtf"]]
     else:
         qpdf = query_terms.select("query_id", "term_id", "qtf").toPandas()
-    if merge == "auto":
-        if num_shards is None:
-            merge = "window"  # unknown shard count → can't bound the collect
-        else:
-            bound = qpdf["query_id"].nunique() * k * num_shards
-            merge = "driver" if bound <= DRIVER_MERGE_MAX_ROWS else "window"
-    elif merge == "driver" and not force_driver_merge and num_shards is not None:
-        # an explicit driver merge must honor the same collect bound the
-        # auto mode enforces: n_queries × k × num_shards rows land on the
-        # driver, and a huge batch forced down this path OOMs it. Callers
-        # who have sized their driver can pass force_driver_merge=True.
-        bound = qpdf["query_id"].nunique() * k * num_shards
-        if bound > DRIVER_MERGE_MAX_ROWS:
-            raise ValueError(
-                f"merge='driver' would collect up to {bound} rows "
-                f"(> DRIVER_MERGE_MAX_ROWS={DRIVER_MERGE_MAX_ROWS}); use "
-                "merge='window'/'auto' or pass force_driver_merge=True"
-            )
-    bq = spark.sparkContext.broadcast(
-        [
-            (qid, list(zip(g["term_id"].tolist(), g["qtf"].tolist())))
-            for qid, g in qpdf.groupby("query_id")
-        ]
-    )
-    theta0 = int(np.floor(threshold * scale))
-
     # term pruning: small term sets go in as an INSET literal (pushed into
     # the parquet scan as row-group stats filters); large batches use a
     # broadcast semi-join instead — a thousands-literal isin() costs seconds
@@ -352,6 +320,31 @@ def retrieve(
             [(int(t),) for t in term_ids], "term_id long"
         )
         relevant = postings.join(F.broadcast(tid_df), "term_id", "left_semi")
+
+    if num_shards is None:
+        # discovered BEFORE the merge is chosen, so the collect bound holds
+        # on every path (the shuffle below needs the count too)
+        row = relevant.agg(F.max("shard_id")).collect()[0]
+        num_shards = int(row[0] or 0) + 1
+    bound = qpdf["query_id"].nunique() * k * num_shards
+    if merge == "auto":
+        merge = "driver" if bound <= DRIVER_MERGE_MAX_ROWS else "window"
+    elif merge == "driver" and bound > DRIVER_MERGE_MAX_ROWS:
+        # n_queries × k × num_shards rows land on the driver, and a huge
+        # batch forced down this path OOMs it
+        raise ValueError(
+            f"merge='driver' would collect up to {bound} rows "
+            f"(> DRIVER_MERGE_MAX_ROWS={DRIVER_MERGE_MAX_ROWS}); use "
+            "merge='auto' or 'window'"
+        )
+
+    bq = spark.sparkContext.broadcast(
+        [
+            (qid, list(zip(g["term_id"].tolist(), g["qtf"].tolist())))
+            for qid, g in qpdf.groupby("query_id")
+        ]
+    )
+    theta0 = int(np.floor(threshold * scale))
 
     def kernel(batches) -> "pd.DataFrame":
         """Per-partition: buffer the (small, term-filtered) block rows,
@@ -420,9 +413,6 @@ def retrieve(
     if prepartitioned:
         arranged = relevant  # prepare_serving already shuffled by shard_id
     else:
-        if num_shards is None:
-            row = relevant.agg(F.max("shard_id")).collect()[0]
-            num_shards = int(row[0] or 0) + 1
         par = spark.sparkContext.defaultParallelism
         arranged = relevant.repartition(max(4 * num_shards, par), "shard_id")
     local = arranged.mapInPandas(

@@ -28,33 +28,6 @@ def corpus(spark, tiny_documents):
     return tf, w, scale
 
 
-def test_local_sort_equals_jvm_sort(spark, corpus):
-    """The python-lexsort encoder (default) and the JVM-sort streaming
-    encoder must emit block-identical postings."""
-    from splade_spark.index.build import build_postings
-
-    _, w, scale = corpus
-    a = build_postings(w, scale, num_shards=8, local_sort=True)
-    b = build_postings(w, scale, num_shards=8, local_sort=False)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_prequantize_equals_float_path(spark, corpus):
-    """JVM-side bround-quantize-before-shuffle (default) must be
-    byte-identical to shuffling the float and quantizing with np.rint in
-    the kernel — F.bround and np.rint are both HALF_EVEN over the same
-    float64 product, so every block (doc_bytes AND w_bytes) matches."""
-    from splade_spark.index.build import build_postings
-
-    _, w, scale = corpus
-    a = build_postings(w, scale, num_shards=8, prequantize=True)
-    b = build_postings(w, scale, num_shards=8, prequantize=False)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # and on the streaming (JVM-sort) encoder too
-    c = build_postings(w, scale, num_shards=8, local_sort=False, prequantize=True)
-    assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
-
-
 def test_resume_repairs_missing_meta(spark, corpus, tmp_path):
     """A build killed between the last ledger write and the meta write
     leaves an index the query path can't open; re-running with resume=True
@@ -213,7 +186,7 @@ def test_driver_merge_equals_window_merge(spark, corpus, tmp_path):
     build_index(w, path, scale, num_shards=4)
     postings = load_postings(spark, path).cache()
     qt = query_term_freqs(queries_df(spark))
-    win = retrieve(postings, qt, scale, k=15, num_shards=4)
+    win = retrieve(postings, qt, scale, k=15, num_shards=4, merge="window")
     drv = retrieve(postings, qt, scale, k=15, num_shards=4, merge="driver")
     key = lambda r: (r.query_id, r.rank, r.doc_id, round(r.score, 9))  # noqa: E731
     assert sorted(map(key, win.collect())) == sorted(map(key, drv.collect()))
@@ -237,12 +210,15 @@ def test_driver_merge_equals_window_merge(spark, corpus, tmp_path):
     assert [(f.name, f.dataType) for f in win.schema] == [
         (f.name, f.dataType) for f in drv.schema
     ]
-    # merge='auto': small batch resolves to the driver path (results
-    # identical either way; the plan check is that it doesn't throw and
-    # matches), an over-bound k×shards product falls back to window, and
-    # an unknown shard count cannot bound the collect → window
+    # merge='auto' (the default): small batch resolves to the driver path
+    # (results identical either way; the plan check is that it doesn't
+    # throw and matches), an unknown shard count is discovered first so the
+    # collect stays bounded, and an over-bound k×shards product falls back
+    # to window
     aut = retrieve(postings, qt, scale, k=15, num_shards=4, merge="auto")
     assert sorted(map(key, win.collect())) == sorted(map(key, aut.collect()))
+    found = retrieve(postings, qt, scale, k=15)
+    assert sorted(map(key, win.collect())) == sorted(map(key, found.collect()))
     from splade_spark.query import wand as _wand
 
     old = _wand.DRIVER_MERGE_MAX_ROWS
@@ -256,8 +232,8 @@ def test_driver_merge_equals_window_merge(spark, corpus, tmp_path):
 
 def test_explicit_driver_merge_guarded(spark, corpus, tmp_path):
     """merge='driver' honors the auto-mode collect bound: a batch whose
-    n_queries x k x num_shards exceeds DRIVER_MERGE_MAX_ROWS raises unless
-    force_driver_merge=True (VERDICT r05 #3); auto behavior unchanged."""
+    n_queries x k x num_shards exceeds DRIVER_MERGE_MAX_ROWS raises, with
+    num_shards passed or discovered; auto falls back to the window merge."""
     import pandas as pd
     import pytest as _pytest
 
@@ -271,15 +247,17 @@ def test_explicit_driver_merge_guarded(spark, corpus, tmp_path):
         {"query_id": ["q1", "q2"], "term_id": [1, 2], "qtf": [1, 1]}
     )
     old = wand_mod.DRIVER_MERGE_MAX_ROWS
-    wand_mod.DRIVER_MERGE_MAX_ROWS = 10  # 2 queries x 5 x 4 shards = 40 > 10
+    # 2 queries x 5 x (>= 1 shard) >= 10 > 9, whatever shard count the
+    # term-filtered postings reveal
+    wand_mod.DRIVER_MERGE_MAX_ROWS = 9
     try:
-        with _pytest.raises(ValueError, match="DRIVER_MERGE_MAX_ROWS"):
-            retrieve(postings, qt, scale, k=5, num_shards=4, merge="driver")
-        # forced: allowed; auto: silently falls back to the window merge
-        retrieve(
-            postings, qt, scale, k=5, num_shards=4, merge="driver",
-            force_driver_merge=True,
-        ).count()
-        retrieve(postings, qt, scale, k=5, num_shards=4, merge="auto").count()
+        for num_shards in (4, None):
+            with _pytest.raises(ValueError, match="DRIVER_MERGE_MAX_ROWS"):
+                retrieve(postings, qt, scale, k=5, num_shards=num_shards,
+                         merge="driver")
+            fallback = retrieve(postings, qt, scale, k=5, num_shards=num_shards)
+            plan = fallback._jdf.queryExecution().optimizedPlan().toString()
+            assert "Window" in plan
+            fallback.count()
     finally:
         wand_mod.DRIVER_MERGE_MAX_ROWS = old
