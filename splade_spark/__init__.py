@@ -22,6 +22,13 @@ Everything is DataFrame/SQL-first; Python only runs inside Arrow-vectorized
 pandas UDFs (never per-row).
 """
 
+from ._pyworker import install_in_worker as _install_in_worker
+
+# engine UDFs pickle module-level functions by reference, so a Python
+# worker imports this package on its first engine task; from then on that
+# reused worker skips PySpark's per-task zip-directory re-read
+_install_in_worker()
+
 __version__ = "0.1.0"
 
 BM25_K1 = 1.2

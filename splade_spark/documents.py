@@ -68,25 +68,48 @@ def assign_doc_ids(
         offsets[pid] = acc
         acc += counts[pid]
 
-    # id attachment is pure JVM codegen: monotonically_increasing_id() is
-    # (partition_id << 33) | local_row_number with rows numbered in flow
-    # order — i.e. the sortWithinPartitions(conv_id) order, read stably
-    # from the cache — so offset[pid] + (mid & (2^33-1)) is exactly the
-    # dense ascending-conv_id id. The previous mapInPandas pass shipped
-    # every consumer's full text through the Python workers ON EVERY
-    # downstream evaluation of `docs` (tokenize, stats, ...) just to
-    # attach an integer (guide §4: eliminate the JVM↔Python boundary).
-    # Partitions are bounded at 2^33 rows by the id encoding — far above
-    # any sane partition sizing.
+    return _attach_doc_ids(with_pid, offsets).select("doc_id", *docs.columns)
+
+
+def _attach_doc_ids(with_pid: DataFrame, offsets: dict[int, int]) -> DataFrame:
+    """Add doc_id = offsets[_pid] + local row number to a frame whose
+    ``_pid`` column is its own spark_partition_id().
+
+    Pure JVM codegen, so downstream evaluations of `docs` (tokenize,
+    stats, ...) never ship text through Python workers just to attach an
+    integer: monotonically_increasing_id() is
+    (partition_id << 33) | local_row_number with rows numbered in flow
+    order — i.e. the sortWithinPartitions(conv_id) order, read stably from
+    the cache — so offset[pid] + (mid & (2^33-1)) is exactly the dense
+    ascending-conv_id id. Partitions are bounded at 2^33 rows by the id
+    encoding — far above any sane partition sizing.
+
+    That bit layout is Spark's implementation, not its contract, so it is
+    checked per row: a row whose mid >> 33 is not its _pid fails the job
+    (raise_error) instead of silently getting a wrong id."""
     max_pid = max(offsets) if offsets else 0
     off_arr = F.array(
         *[F.lit(int(offsets.get(p, 0))) for p in range(max_pid + 1)]
     )
-    local = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
-    doc_id = (
-        F.element_at(off_arr, F.col("_pid") + 1) + local
-    ).cast("long").alias("doc_id")
-    return with_pid.select(doc_id, *docs.columns)
+    # _mid is its own column so the check and the id read the same value:
+    # Spark never inlines a nondeterministic column into its consumers
+    mid = F.col("_mid")
+    doc_id = F.when(
+        F.shiftright(mid, 33) == F.col("_pid"),
+        F.element_at(off_arr, F.col("_pid") + 1) + mid.bitwiseAND(F.lit((1 << 33) - 1)),
+    ).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("assign_doc_ids: monotonically_increasing_id() >> 33 = "),
+                F.shiftright(mid, 33).cast("string"),
+                F.lit(" but spark_partition_id() = "),
+                F.col("_pid").cast("string"),
+            )
+        )
+    )
+    return with_pid.withColumn("_mid", F.monotonically_increasing_id()).withColumn(
+        "doc_id", doc_id.cast("long")
+    )
 
 
 def build_documents(

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -42,6 +43,11 @@ from .similarity import (
 )
 
 ANN_META = "_ann_meta.json"
+
+# serializes the session-global discovery-threshold override in
+# _read_probed_partitions: two concurrent probes would otherwise interleave
+# set/read/restore, and the later restore re-installs the override for good
+_DISCOVERY_CONF_LOCK = threading.Lock()
 
 
 def _write_meta(path: str, meta: dict) -> None:
@@ -101,17 +107,19 @@ def _read_probed_partitions(
         # above parallelPartitionDiscovery.threshold=32 paths and costs
         # ~2.5 s per call against ~0.2 s serial on a local FS; on object
         # stores, where the job earns its keep, os.listdir fails above
-        # and this branch never runs). Conf restored immediately.
+        # and this branch never runs). Conf restored immediately, under
+        # one lock so concurrent serving threads cannot leave it set.
         key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        old = spark.conf.get(key)
-        spark.conf.set(key, "1000000")
-        try:
-            r = spark.read
-            if base:
-                r = r.option("basePath", base)
-            return r.parquet(*paths)  # listing happens eagerly here
-        finally:
-            spark.conf.set(key, old)
+        with _DISCOVERY_CONF_LOCK:
+            old = spark.conf.get(key)
+            spark.conf.set(key, "1000000")
+            try:
+                r = spark.read
+                if base:
+                    r = r.option("basePath", base)
+                return r.parquet(*paths)  # listing happens eagerly here
+            finally:
+                spark.conf.set(key, old)
 
     probes = list(probes)
     if names is not None:

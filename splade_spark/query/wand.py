@@ -237,12 +237,14 @@ def prepare_serving(
     (efficient_splade_pisa/README.md:47-59).
 
     partitions defaults to ONE task wave (max(num_shards, default
-    parallelism)) — interactive latency is task-launch-bound, and the 4x
-    shard oversubscription retrieve() uses for heavy batch scoring
-    (anti-skew: hash collisions stacking shards on one task) triples
-    single-query p50 here (measured 1.08 s vs 0.36 s at sf0.1 / 32
-    cores). For a serving frame that will mostly take LARGE batches,
-    pass partitions=4*num_shards explicitly."""
+    parallelism)) — a single query's kernel stage costs little more than
+    the fixed start-up of its Python tasks (each pays PySpark's per-task
+    import-cache refresh before any scoring; see
+    ``splade_spark._pyworker``), and the 4x shard oversubscription
+    retrieve() uses for heavy batch scoring (anti-skew: hash collisions
+    stacking shards on one task) triples single-query p50 here (measured
+    1.08 s vs 0.36 s at sf0.1 / 32 cores). For a serving frame that will
+    mostly take LARGE batches, pass partitions=4*num_shards explicitly."""
     spark = postings.sparkSession
     par = spark.sparkContext.defaultParallelism
     if partitions is None:

@@ -6,12 +6,16 @@ Reference analogue: PISA holds the built impact index between queries
 that role for the embedding column."""
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 
 from splade_spark.pipeline.ann_index import (
+    _read_probed_partitions,
     build_ivf_index,
     build_lsh_index,
     ivf_topk_from_index,
@@ -100,6 +104,56 @@ def test_lsh_partition_pruning(spark, lsh_path, qvecs):
     assert len(probes) < n_buckets  # probing is selective on this corpus
     got_buckets = {r.bucket for r in filtered.select("bucket").distinct().collect()}
     assert got_buckets <= set(probes)
+
+
+def test_probe_conf_restored_under_concurrent_reads(spark, tmp_path, monkeypatch):
+    """Two serving threads probing at once must leave the session-global
+    discovery threshold as they found it. The patched reader forces the
+    racy order: the second probe enters its read while the first holds
+    the override, and restores after the first has restored."""
+    (tmp_path / "bucket=1").mkdir()
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    original = spark.conf.get(key)
+    first_in_read = threading.Event()
+    second_in_read = threading.Event()
+    first_done = threading.Event()
+    callers = []
+
+    def fake_parquet(self, *paths):
+        callers.append(threading.current_thread().name)
+        if threading.current_thread().name == "first":
+            first_in_read.set()
+            # bounded: with the lock the second probe cannot enter yet
+            second_in_read.wait(timeout=2)
+        else:
+            second_in_read.set()
+            first_done.wait(timeout=30)
+        return None
+
+    monkeypatch.setattr(DataFrameReader, "parquet", fake_parquet)
+    errors = []
+
+    def probe():
+        try:
+            _read_probed_partitions(spark, str(tmp_path), "bucket", [1], "x long")
+        except Exception as e:  # surfaced by the main thread
+            errors.append(e)
+
+    first = threading.Thread(target=probe, name="first")
+    second = threading.Thread(target=probe, name="second")
+    try:
+        first.start()
+        assert first_in_read.wait(timeout=30)
+        second.start()
+        first.join(timeout=60)
+        first_done.set()
+        second.join(timeout=60)
+        final = spark.conf.get(key)
+    finally:
+        spark.conf.set(key, original)
+    assert not first.is_alive() and not second.is_alive()
+    assert not errors and sorted(callers) == ["first", "second"]
+    assert final == original
 
 
 def test_lsh_multiprobe2_superset(spark, lsh_path, qvecs):

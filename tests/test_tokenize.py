@@ -1,9 +1,10 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from splade_spark.bm25 import bm25_topk, bm25_weights
-from splade_spark.documents import build_documents
+from splade_spark.documents import _attach_doc_ids, build_documents
 from splade_spark.stats import corpus_stats, doc_freqs, idf_value
 from splade_spark.tokenize import query_term_freqs, term_freqs, tokenize
 
@@ -43,6 +44,20 @@ def test_documents_build(tiny_transcripts, tiny_documents):
     )
     got = docs.filter(F.col("conv_id") == one).collect()[0].text
     assert got == expected
+
+
+def test_doc_id_layout_invariant(spark):
+    # assign_doc_ids relies on monotonically_increasing_id() carrying the
+    # partition id in bits 33+; a row where it does not must fail the job
+    frame = spark.range(0, 8, numPartitions=2)
+    offsets = {0: 0, 1: 4}
+    ok = frame.withColumn("_pid", F.spark_partition_id())
+    assert sorted(r.doc_id for r in _attach_doc_ids(ok, offsets).collect()) == list(
+        range(8)
+    )
+    wrong = frame.withColumn("_pid", 1 - F.spark_partition_id())
+    with pytest.raises(Exception, match="assign_doc_ids: monotonically_increasing_id"):
+        _attach_doc_ids(wrong, offsets).collect()
 
 
 def test_bm25_weights_hand_computed(spark):
