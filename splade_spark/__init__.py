@@ -9,8 +9,8 @@ data-processing capabilities of naver/splade (reference studied read-only at
 - ``stats``       : corpus statistics (N, avgdl, df, idf, FLOPS, index_dist)
 - ``bm25``        : exact DataFrame BM25 oracle (join + groupBy + window top-k)
 - ``index``       : docID-sorted, delta+varint, u8-quantized, block-max
-                    posting blocks (Arrow grouped-map build, tiered merge,
-                    per-partition checkpoint ledger)
+                    posting blocks (one Arrow partition encoder for build
+                    and tiered merge, per-partition checkpoint ledger)
 - ``query``       : document-at-a-time block-max WAND Arrow kernel
 - ``evaluation``  : MRR@k / recall@k / NDCG@k in DataFrame ops
 - ``pruning``     : static index pruning (value / quantile / per-doc top-k)

@@ -258,8 +258,8 @@ def main(argv: list[str] | None = None) -> int:
             k=args.k,
             threshold=args.threshold,
             num_shards=meta["num_shards"],
-            bits=meta.get("bits", 8),
-            codec=meta.get("codec", "varint"),
+            bits=meta["bits"],
+            codec=meta["codec"],
         )
         write_runs_parquet(runs, args.out)
         _log(f"query: k={args.k} wall={time.time() - t0:.2f}s → {args.out}")

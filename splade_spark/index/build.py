@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import BLOCK_SIZE
-from .codec import check_bits, encode_groups
+from .codec import check_bits, encode_groups, quantize_weights
 
 POSTINGS_SCHEMA = (
     "shard_id int, term_id long, block_id int, first_doc long, last_doc long, "
@@ -46,9 +46,63 @@ POSTINGS_SCHEMA = (
 )
 
 
+# index-meta fields that older indexes may lack: every meta/ledger reader
+# fills them in, so callers index meta["bits"] / meta["codec"] directly
+META_DEFAULTS = {"bits": 8, "codec": "varint"}
+
+
 def with_shard(weights: DataFrame, num_shards: int) -> DataFrame:
     return weights.withColumn(
         "shard_id", F.pmod(F.col("doc_id"), F.lit(num_shards)).cast("int")
+    )
+
+
+def encode_partition(shard, term, doc, q, block_size: int, bits: int, codec: str):
+    """One partition's postings → ONE POSTINGS_SCHEMA RecordBatch.
+
+    The only posting encoder: build_postings calls it on quantized build
+    rows and merge_postings on decoded segment blocks, in any row order.
+    One np.lexsort, one encode_groups pass over every (shard, term) group,
+    and the numpy outputs go back as Arrow arrays with no pandas round trip
+    (guide §4.2: hand whole batches to vectorized native code)."""
+    import numpy as np
+    import pyarrow as pa
+
+    o = np.lexsort((doc, term, shard))  # (shard,term,doc) keys are unique
+    g = encode_groups(
+        shard[o], term[o], doc[o], q[o],
+        block_size=block_size, bits=bits, codec=codec,
+    )
+    return pa.RecordBatch.from_pydict(g, schema=pa.schema([
+        ("shard_id", pa.int32()), ("term_id", pa.int64()),
+        ("block_id", pa.int32()), ("first_doc", pa.int64()),
+        ("last_doc", pa.int64()), ("n", pa.int32()),
+        ("doc_bytes", pa.binary()), ("w_bytes", pa.binary()),
+        ("block_max", pa.int32()),
+    ]))
+
+
+def encode_partition_count(spark: SparkSession) -> int:
+    """Partition count for the encode stage (build and merge). Explicit,
+    because AQE's coalescePartitions would shrink this CPU-bound,
+    byte-light stage to a handful of partitions based on shuffle bytes
+    alone; a user-specified repartition(N) is exempt from coalescing."""
+    return max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+        spark.sparkContext.defaultParallelism * 2,
+    )
+
+
+def arrange_for_sink(postings: DataFrame, num_shards: int) -> DataFrame:
+    """Range the (small, compressed) blocks into one partition per shard,
+    term-sorted, before any sink write (build_index, merge_indexes,
+    write_postings_iceberg). Without it every encode partition writes its
+    own sliver into every shard dir (encode partitions × shards files, whose
+    serial commit renames dominate), and term_id row-group stats
+    interleave; term-sorted files give the query path tight min/max
+    pruning on term_id."""
+    return postings.repartition(num_shards, "shard_id").sortWithinPartitions(
+        "shard_id", "term_id", "block_id"
     )
 
 
@@ -63,8 +117,9 @@ def build_postings(
     """(doc_id, term_id, weight) → compressed posting blocks.
 
     One shuffle — repartition on (shard_id, term_id) — then one vectorized
-    Arrow encoder (mapInArrow) that takes the partition's (shard, term)
-    groups in one encode_groups pass. A grouped-map per (shard, term) is
+    Arrow encoder (mapInArrow → encode_partition, shared with the segment
+    merge) that takes the partition's (shard, term) groups in one
+    encode_groups pass. A grouped-map per (shard, term) is
     wrong at scale in both directions: Zipf tails make millions of tiny
     groups (per-group pandas overhead dominates), and a per-shard grouping
     would buffer whole shards in memory.
@@ -79,62 +134,27 @@ def build_postings(
     (spark.sql.shuffle.partitions, or defaultParallelism).
     """
 
-    def encode_partition(batches):
-        """Arrow-native partition encoder: the int64/float64 input columns
-        come out of the Arrow buffers as numpy views (one combine_chunks
-        materialization, no pandas frame construction), and the encoded
-        blocks go back as ONE RecordBatch built straight from the numpy
-        outputs of encode_groups — the pandas round trip this replaces
-        copied every input column twice per partition (guide §4.2: hand
-        whole batches to vectorized native code)."""
-        import numpy as np
+    def encode(batches):
         import pyarrow as pa
 
         chunks = [rb for rb in batches if rb.num_rows]
         if not chunks:
             return
         tbl = pa.Table.from_batches(chunks).combine_chunks()
-        s = tbl.column("shard_id").to_numpy()
-        t = tbl.column("term_id").to_numpy()
-        d = tbl.column("doc_id").to_numpy()
-        w = tbl.column("weight").to_numpy()
-        o = np.lexsort((d, t, s))  # stable; (shard,term,doc) keys are unique
-        g = encode_groups(
-            s[o], t[o], d[o], w[o], scale,
-            block_size=block_size, bits=bits, codec=codec,
+        s, t, d, w = (
+            tbl.column(k).to_numpy()
+            for k in ("shard_id", "term_id", "doc_id", "weight")
         )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(g["shard_id"], type=pa.int32()),
-                pa.array(g["term_id"], type=pa.int64()),
-                pa.array(g["block_id"], type=pa.int32()),
-                pa.array(g["first_doc"], type=pa.int64()),
-                pa.array(g["last_doc"], type=pa.int64()),
-                pa.array(g["n"], type=pa.int32()),
-                pa.array(g["doc_bytes"], type=pa.binary()),
-                pa.array(g["w_bytes"], type=pa.binary()),
-                pa.array(g["block_max"], type=pa.int32()),
-            ],
-            names=[
-                "shard_id", "term_id", "block_id", "first_doc", "last_doc",
-                "n", "doc_bytes", "w_bytes", "block_max",
-            ],
+        yield encode_partition(
+            s, t, d, quantize_weights(w, scale, bits), block_size, bits, codec
         )
 
-    # explicit partition count — AQE's coalescePartitions would shrink this
-    # CPU-bound encode stage to a handful of partitions based on shuffle
-    # bytes alone; user-specified repartition(N) is exempt from coalescing
-    spark = weights.sparkSession
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        spark.sparkContext.defaultParallelism * 2,
-    )
     arranged = with_shard(weights, num_shards).repartition(
-        n_part, "shard_id", "term_id"
+        encode_partition_count(weights.sparkSession), "shard_id", "term_id"
     )
     return arranged.select(
         "shard_id", "term_id", "doc_id", "weight"
-    ).mapInArrow(encode_partition, schema=POSTINGS_SCHEMA)
+    ).mapInArrow(encode, schema=POSTINGS_SCHEMA)
 
 
 def _ledger_dir(path: str) -> str:
@@ -149,7 +169,7 @@ def read_ledger(path: str) -> dict[int, dict]:
     for f in os.listdir(d):
         if f.startswith("shard-") and f.endswith(".json"):
             with open(os.path.join(d, f)) as fh:
-                entry = json.load(fh)
+                entry = {**META_DEFAULTS, **json.load(fh)}
             out[int(entry["shard_id"])] = entry
     return out
 
@@ -204,13 +224,7 @@ def build_index(
             "scale": scale, "num_shards": num_shards,
             "block_size": block_size, "bits": bits, "codec": codec,
         }
-        got = {
-            "scale": ref.get("scale"),
-            "num_shards": ref.get("num_shards"),
-            "block_size": ref.get("block_size"),
-            "bits": ref.get("bits", 8),
-            "codec": ref.get("codec", "varint"),
-        }
+        got = {k: ref.get(k) for k in expect}
         if got != expect:
             raise ValueError(
                 f"resume parameter mismatch: ledger has {got}, "
@@ -253,16 +267,8 @@ def build_index(
         bits=bits,
         codec=codec,
     )
-    # Range-repartition the (small) encoded blocks so each shard writes ~one
-    # term-sorted file: without this, encode_partitions × shards files get
-    # committed (serial renames dominate), and term row-group stats are
-    # interleaved. Term-sorted files give the query path tight min/max
-    # pruning on term_id.
-    arranged = postings.repartition(num_shards, "shard_id").sortWithinPartitions(
-        "shard_id", "term_id", "block_id"
-    )
     (
-        arranged.write.mode("overwrite")
+        arrange_for_sink(postings, num_shards).write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard_id")
         .parquet(path)
@@ -350,10 +356,7 @@ def write_postings_iceberg(
             "org.apache.iceberg:iceberg-spark-runtime via spark.jars.packages "
             "or use the parquet path (build_index fmt='parquet')"
         )
-    arranged = postings.repartition(num_shards, "shard_id").sortWithinPartitions(
-        "shard_id", "term_id", "block_id"
-    )
-    writer = arranged.writeTo(table)
+    writer = arrange_for_sink(postings, num_shards).writeTo(table)
     for k, v in (properties or {}).items():
         writer = writer.tableProperty(k, str(v))
     writer.partitionedBy(F.col("shard_id")).createOrReplace()
@@ -420,16 +423,16 @@ def read_index_meta_iceberg(spark: SparkSession, table: str) -> dict:
         "scale": float(props["splade.scale"]),
         "num_shards": int(props["splade.num_shards"]),
         "block_size": int(props["splade.block_size"]),
-        "bits": check_bits(props.get("splade.bits", 8)),
-        "codec": props.get("splade.codec", "varint"),
+        "bits": check_bits(props.get("splade.bits", META_DEFAULTS["bits"])),
+        "codec": props.get("splade.codec", META_DEFAULTS["codec"]),
     }
 
 
 def read_index_meta(path: str) -> dict:
     with open(os.path.join(path, "_index_meta.json")) as fh:
-        meta = json.load(fh)
+        meta = {**META_DEFAULTS, **json.load(fh)}
     # fail loudly here rather than decoding garbage weights in the kernel
-    check_bits(meta.get("bits", 8))
+    check_bits(meta["bits"])
     return meta
 
 

@@ -10,8 +10,10 @@ bytes, block_max over the stored *quantized* weights) — block_max in the
 integer domain matching POSTINGS_SCHEMA and the WAND kernel's integer
 scoring keeps block-max pruning rank-safe with no float round-trip.
 
-Everything is vectorized numpy — these functions run inside Arrow grouped-map
-UDFs on executors; no per-row Python.
+Everything is vectorized numpy — these functions run inside the one Arrow
+partition encoder (build.encode_partition, a mapInArrow UDF shared by the
+build and the segment merge) and the WAND kernel on executors; no per-row
+Python.
 """
 
 from __future__ import annotations
@@ -193,63 +195,21 @@ def dequantize_weights(q: np.ndarray, scale: float) -> np.ndarray:
     return q.astype(np.float64) / scale
 
 
-def encode_blocks(
-    doc_ids: np.ndarray,
-    weights: np.ndarray,
-    scale: float,
-    block_size: int = BLOCK_SIZE,
-    bits: int = 8,
-) -> list[tuple[int, int, int, int, bytes, bytes, float]]:
-    """Cut one term's docID-sorted posting list into compressed blocks.
-
-    Returns rows (block_id, first_doc, last_doc, n, doc_bytes, w_bytes,
-    block_max). doc_bytes = varint of consecutive deltas (n-1 values);
-    block_max = max *quantized* weight as an int — the same integer domain
-    encode_groups emits, POSTINGS_SCHEMA declares ('block_max int'), and
-    the WAND kernel's integer scoring reads (a dequantized float here
-    would truncate toward zero when cast into the int schema, making
-    whole blocks prunable below θ and silently dropping matches).
-    """
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    order = np.argsort(doc_ids, kind="stable")
-    doc_ids = doc_ids[order]
-    q = quantize_weights(np.asarray(weights)[order], scale, bits)
-    rows = []
-    for b0 in range(0, len(doc_ids), block_size):
-        d = doc_ids[b0 : b0 + block_size]
-        w = q[b0 : b0 + block_size]
-        deltas = np.diff(d).astype(np.uint64)
-        bmax = int(w.max()) if len(w) else 0
-        rows.append(
-            (
-                b0 // block_size,
-                int(d[0]),
-                int(d[-1]),
-                len(d),
-                encode_varint(deltas),
-                w.tobytes(),
-                bmax,
-            )
-        )
-    return rows
-
-
 def encode_groups(
     shard: np.ndarray,
     term: np.ndarray,
     doc: np.ndarray,
-    weight: np.ndarray,
-    scale: float,
+    q: np.ndarray,
     block_size: int = BLOCK_SIZE,
     bits: int = 8,
     codec: str = "varint",
-    prequantized: bool = False,
 ) -> dict[str, list]:
     """Encode MANY (shard, term) posting groups in one vectorized pass.
 
-    Input arrays must be sorted by (shard, term, doc) — the build encoder's
-    worker-side np.lexsort (and the segment merge's sortWithinPartitions)
-    guarantees this. Group/block boundaries, deltas,
+    q holds the quantized integer weights (quantize_weights for a build,
+    decode_blocks for a segment merge). Input arrays must be sorted by
+    (shard, term, doc) — build.encode_partition's worker-side np.lexsort,
+    the one caller, guarantees this. Group/block boundaries, deltas,
     varint packing, and block maxima are all computed with cumsum/reduceat;
     the only Python loop slices the shared byte buffers per block (cheap).
     This replaces a per-group applyInPandas, whose per-group pandas overhead
@@ -273,15 +233,9 @@ def encode_groups(
             )
         }
     doc = np.asarray(doc, dtype=np.int64)
-    if prequantized:
-        # weights arrived as integers already rint'ed+clipped (the segment
-        # merge re-encodes decoded quantized weights) — same value domain as
-        # quantize_weights, asserted byte-identical by the segment-merge ≡
-        # full-build test
-        check_bits(bits)
-        q = np.asarray(weight).astype(np.uint8 if bits <= 8 else np.uint16)
-    else:
-        q = quantize_weights(np.asarray(weight), scale, bits)
+    q = np.asarray(q).astype(
+        np.uint8 if check_bits(bits) <= 8 else np.uint16, copy=False
+    )
 
     new_grp = np.empty(n, dtype=bool)
     new_grp[0] = True
@@ -319,8 +273,8 @@ def encode_groups(
     w_bytes = [wbuf[blk_start[b] * isz : blk_end[b] * isz] for b in range(nb)]
     block_max = np.maximum.reduceat(q, blk_start).astype(np.int32)
 
-    # numeric fields stay numpy (no per-element .tolist() boxing): both the
-    # pandas and the Arrow encode sinks consume arrays directly
+    # numeric fields stay numpy (no per-element .tolist() boxing): the
+    # Arrow sink consumes arrays directly
     return {
         "shard_id": np.asarray(shard)[blk_start].astype(np.int32),
         "term_id": np.asarray(term)[blk_start].astype(np.int64),
@@ -359,6 +313,45 @@ def decode_block_raw(
     return docs, q
 
 
+def decode_blocks(
+    first: np.ndarray,
+    n: np.ndarray,
+    doc_bytes: list[bytes],
+    w_bytes: list[bytes],
+    bits: int = 8,
+    codec: str = "varint",
+) -> tuple[np.ndarray, np.ndarray]:
+    """MANY blocks → concatenated (doc_ids int64, quantized weights int64),
+    in block order. Weights are one frombuffer over the joined weight
+    bytes. Varint doc deltas of every block parse in ONE vectorized pass
+    over the joined streams (LEB128 is self-delimiting); FOR deltas decode
+    per block (each carries its own bit width). A segmented cumsum then
+    rebuilds absolute docIDs: doc[j] = first_b + Σ deltas of block b."""
+    first = np.asarray(first, dtype=np.int64)
+    n = np.asarray(n, dtype=np.int64)
+    total = int(n.sum())
+    if total == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    if codec == "for":
+        deltas = np.concatenate(
+            [decode_for(b, int(c) - 1) for b, c in zip(doc_bytes, n)]
+        )
+    else:
+        deltas = decode_varint(b"".join(doc_bytes))
+    starts = np.cumsum(n) - n
+    vals = np.empty(total, dtype=np.int64)
+    mask = np.ones(total, dtype=bool)
+    mask[starts] = False
+    vals[starts] = first
+    vals[mask] = deltas.astype(np.int64)
+    c = np.cumsum(vals)
+    doc = c - np.repeat(c[starts] - first, n)
+    q = np.frombuffer(
+        b"".join(w_bytes), dtype=np.uint8 if bits <= 8 else np.uint16
+    ).astype(np.int64)
+    return doc, q
+
+
 def decode_block(
     first_doc: int,
     n: int,
@@ -368,6 +361,6 @@ def decode_block(
     bits: int = 8,
     codec: str = "varint",
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_blocks for one block → (doc_ids, dequant weights)."""
+    """One encode_groups block → (doc_ids, dequantized weights)."""
     docs, q = decode_block_raw(first_doc, n, doc_bytes, w_bytes, bits, codec)
     return docs, dequantize_weights(q, scale)

@@ -10,29 +10,33 @@ idea; in-repo, the reference rebuilds from scratch — inverted_index.py:23-46).
 
 The merge itself is one Spark job: union the segments' postings (still
 block-compressed — the shuffle carries compressed blocks, never raw posting
-rows), repartition by (shard, term) + sortWithinPartitions(shard, term,
-first_doc), then a *streaming* mapInPandas that decodes, concatenates by
-docID and re-encodes every complete (shard, term) group per Arrow batch,
-carrying the trailing possibly-incomplete group into the next batch — the
-same encode_groups kernel as the build encoder (build.py:build_postings).
-A per-group applyInPandas is wrong here for the same reason it was wrong
-in the build: Zipf tails create millions of tiny (shard, term) groups and
-per-group pandas overhead dominates. Because shards partition docID space
-identically in every segment (same num_shards), the merge never crosses
-shards; segments are docID-disjoint, so blocks sorted by first_doc
-concatenate into a globally docID-sorted list per group.
+rows), repartition by (shard, term), then one mapInArrow per partition that
+decodes every block in one decode_blocks call and re-encodes through the
+build's own partition encoder (build.encode_partition: worker-side lexsort
++ encode_groups) — one posting encoder for build and merge. Because shards
+partition docID space identically in every segment (same num_shards), the
+merge never crosses shards; segments are docID-disjoint, so the lexsort on
+(shard, term, doc) yields exactly the postings order a full build over the
+union would see, and the merged index is block-identical to that build.
+Memory: a worker buffers one partition's decoded postings — never more than
+a build over the same postings buffers in the same encoder.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import numpy as np
-
-from .build import POSTINGS_SCHEMA, _write_index_meta, read_index_meta
-from .codec import decode_block_raw, decode_varint, encode_groups
+from .build import (
+    POSTINGS_SCHEMA,
+    _write_index_meta,
+    arrange_for_sink,
+    encode_partition,
+    encode_partition_count,
+    read_index_meta,
+)
+from .codec import decode_blocks
 
 
 def merge_postings(
@@ -44,95 +48,39 @@ def merge_postings(
 ) -> DataFrame:
     """Merge docID-sorted posting segments into one postings DataFrame.
 
-    Streaming re-encode (see module docstring): one repartition of the
-    compressed blocks, then all complete (shard, term) groups in each
-    Arrow batch are decoded + re-encoded in a single vectorized
-    encode_groups pass. The decode side stays in the integer quantized
-    domain end to end (decoded weights feed encode_groups with
-    prequantized=True), which is byte-identical to the old
-    dequantize-then-requantize round trip — rint((q/scale)*scale) == q —
-    without the two float passes. Varint doc deltas for ALL blocks in a
-    batch decode in ONE vectorized pass over the concatenated byte
-    streams (segmented cumsum reconstructs absolute docIDs), replacing
-    the per-block Python decode loop."""
+    One repartition of the compressed blocks by (shard, term), then per
+    partition: decode all blocks (decode_blocks), repeat each block's
+    shard/term over its postings, and re-encode with encode_partition.
+    The decode stays in the integer quantized domain end to end, which is
+    byte-identical to a dequantize-then-requantize round trip —
+    rint((q/scale)*scale) == q — without the two float passes, so `scale`
+    is not needed to re-encode (kept for callers)."""
     unioned = segments[0]
     for s in segments[1:]:
         unioned = unioned.unionByName(s)
-    spark = unioned.sparkSession
-    # explicit partition count — AQE would coalesce this CPU-heavy,
-    # byte-light stage down to a handful of partitions
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        spark.sparkContext.defaultParallelism * 2,
-    )
-    arranged = unioned.repartition(
-        n_part, "shard_id", "term_id"
-    ).sortWithinPartitions("shard_id", "term_id", "first_doc")
 
-    wdtype = np.uint8 if bits <= 8 else np.uint16
+    def reencode(batches):
+        import pyarrow as pa
 
-    def _reencode_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_arr = pdf["n"].to_numpy(np.int64)
-        first = pdf["first_doc"].to_numpy(np.int64)
-        total = int(n_arr.sum())
-        if codec == "varint":
-            # one vectorized decode of every block's delta stream: LEB128
-            # is self-delimiting, so the concatenated buffers parse in a
-            # single pass (sum(n-1) deltas, in block order)
-            deltas = decode_varint(b"".join(pdf["doc_bytes"])).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
-            vals = np.empty(total, dtype=np.int64)
-            mask = np.ones(total, dtype=bool)
-            mask[starts] = False
-            vals[starts] = first
-            vals[mask] = deltas
-            c = np.cumsum(vals)
-            # segmented cumsum: doc[j] = first_b + Σ deltas in block b
-            doc = c - np.repeat(c[starts] - first, n_arr)
-            q = np.frombuffer(
-                b"".join(pdf["w_bytes"]), dtype=wdtype
-            ).astype(np.int64)
-        else:
-            docs_all, w_all = [], []
-            for f, n, db, wb in zip(
-                pdf["first_doc"], pdf["n"], pdf["doc_bytes"], pdf["w_bytes"]
-            ):
-                d, w = decode_block_raw(int(f), int(n), db, wb, bits, codec)
-                docs_all.append(d)
-                w_all.append(w)
-            doc = np.concatenate(docs_all)
-            q = np.concatenate(w_all)
-        shard_rep = np.repeat(pdf["shard_id"].to_numpy(), n_arr)
-        term_rep = np.repeat(pdf["term_id"].to_numpy(), n_arr)
-        return pd.DataFrame(
-            encode_groups(
-                shard_rep, term_rep, doc, q, scale,
-                block_size=block_size, bits=bits, codec=codec,
-                prequantized=True,
-            )
+        chunks = [rb for rb in batches if rb.num_rows]
+        if not chunks:
+            return
+        tbl = pa.Table.from_batches(chunks).combine_chunks()
+        col = tbl.column
+        n = col("n").to_numpy().astype(np.int64)
+        doc, q = decode_blocks(
+            col("first_doc").to_numpy(), n, col("doc_bytes").to_pylist(),
+            col("w_bytes").to_pylist(), bits, codec,
+        )
+        yield encode_partition(
+            np.repeat(col("shard_id").to_numpy(), n),
+            np.repeat(col("term_id").to_numpy(), n),
+            doc, q, block_size, bits, codec,
         )
 
-    def reencode_stream(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            s = pdf["shard_id"].to_numpy()
-            t = pdf["term_id"].to_numpy()
-            same_tail = (s == s[-1]) & (t == t[-1])
-            not_tail = np.flatnonzero(~same_tail)
-            cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
-            pending = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield _reencode_rows(body)
-        if pending is not None and len(pending):
-            yield _reencode_rows(pending)
-
-    return arranged.mapInPandas(reencode_stream, schema=POSTINGS_SCHEMA)
+    return unioned.repartition(
+        encode_partition_count(unioned.sparkSession), "shard_id", "term_id"
+    ).mapInArrow(reencode, schema=POSTINGS_SCHEMA)
 
 
 def merge_indexes(
@@ -149,17 +97,14 @@ def merge_indexes(
     scale = metas[0]["scale"]
     num_shards = metas[0]["num_shards"]
     block_size = metas[0]["block_size"]
+    bits, codec = metas[0]["bits"], metas[0]["codec"]
     # explicit raises, not asserts — these guard against silent index
     # corruption and must survive python -O
     if not all(
         m["scale"] == scale and m["num_shards"] == num_shards for m in metas
     ):
         raise ValueError("segments must share quantization scale and shard count")
-    if not all(
-        m.get("codec", "varint") == metas[0].get("codec", "varint")
-        and m.get("bits", 8) == metas[0].get("bits", 8)
-        for m in metas
-    ):
+    if not all(m["codec"] == codec and m["bits"] == bits for m in metas):
         raise ValueError("segments must share posting codec and quantization width")
     # explicit schema: an empty segment (no parquet files under the
     # partition dirs) fails schema inference; its (None, None) range is
@@ -181,21 +126,10 @@ def merge_indexes(
                 f"segment docID ranges overlap ({lo_a}..{hi_a} vs {lo_b}..): "
                 "merge requires docID-disjoint segments (watermark-allocated)"
             )
-    merged = merge_postings(
-        segs, scale, block_size,
-        bits=metas[0].get("bits", 8),
-        codec=metas[0].get("codec", "varint"),
-    )
-    # Same sink arrangement as build_index: range the (small, compressed)
-    # blocks into one partition per shard so each shard directory gets ~one
-    # term-sorted file. Without this every re-encode partition writes its
-    # own sliver into every shard dir (encode_partitions × shards files —
-    # measured 2 048 at the bench shape): the commit's serial renames
-    # dominate merge wall time and the query path loses tight term_id
-    # row-group pruning.
-    merged = merged.repartition(num_shards, "shard_id").sortWithinPartitions(
-        "shard_id", "term_id", "block_id"
-    )
+    merged = merge_postings(segs, scale, block_size, bits=bits, codec=codec)
+    # same sink arrangement as build_index (without it: 2 048 files at the
+    # bench shape, whose serial commit renames dominated merge wall time)
+    merged = arrange_for_sink(merged, num_shards)
     # STATIC overwrite, unlike build_index's dynamic mode: dynamic only
     # replaces partitions present in the new data, so a merge into a path
     # that previously held an index with more shards (or any shard the new
@@ -213,8 +147,8 @@ def merge_indexes(
             "scale": scale,
             "num_shards": num_shards,
             "block_size": block_size,
-            "bits": metas[0].get("bits", 8),
-            "codec": metas[0].get("codec", "varint"),
+            "bits": bits,
+            "codec": codec,
             "lineage": {"merged_from": segment_paths},
         },
     )

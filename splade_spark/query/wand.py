@@ -57,13 +57,11 @@ class _BlockCache:
     Shared by every query of a batch within one shard group so head-term
     blocks decode once per batch, but bounded: when the budget is
     exceeded the least-recently-used entries are dropped and a later
-    touch simply re-decodes — correctness is unaffected by construction.
-    budget=None disables eviction (the pre-round-6 unbounded behavior,
-    used by the in-process kernel tests)."""
+    touch simply re-decodes — correctness is unaffected by construction."""
 
     __slots__ = ("budget", "nbytes", "data")
 
-    def __init__(self, budget: int | None = DECODE_CACHE_BYTES):
+    def __init__(self, budget: int = DECODE_CACHE_BYTES):
         self.budget = budget
         self.nbytes = 0
         self.data: OrderedDict = OrderedDict()
@@ -76,8 +74,6 @@ class _BlockCache:
 
     def put(self, key, blk) -> None:
         self.data[key] = blk
-        if self.budget is None:
-            return
         self.nbytes += blk[0].nbytes + blk[1].nbytes
         while self.nbytes > self.budget and len(self.data) > 1:
             _, old = self.data.popitem(last=False)

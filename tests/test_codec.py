@@ -6,9 +6,10 @@ from hypothesis import strategies as st
 
 from splade_spark.index.codec import (
     decode_block,
+    decode_block_raw,
+    decode_blocks,
     decode_varint,
-    dequantize_weights,
-    encode_blocks,
+    encode_groups,
     encode_varint,
     quantize_weights,
 )
@@ -32,38 +33,53 @@ def test_varint_known_bytes():
 @given(
     st.lists(
         st.tuples(
-            st.integers(min_value=0, max_value=10**9),
-            st.floats(min_value=0.0, max_value=20.0, allow_nan=False),
+            st.integers(min_value=0, max_value=2),  # shard
+            st.integers(min_value=0, max_value=3),  # term
+            st.integers(min_value=0, max_value=10**9),  # doc
+            st.integers(min_value=0, max_value=2**16 - 1),  # quantized weight
         ),
         min_size=1,
         max_size=700,
-        unique_by=lambda t: t[0],
-    )
+        unique_by=lambda t: t[:3],
+    ),
+    st.sampled_from(["varint", "for"]),
+    st.sampled_from([8, 16]),
+    st.sampled_from([16, 128]),
 )
 @settings(max_examples=100, deadline=None)
-def test_block_roundtrip(postings):
-    docs = np.array([p[0] for p in postings], dtype=np.int64)
-    weights = np.array([p[1] for p in postings])
-    scale = 255.0 / 20.0
-    blocks = encode_blocks(docs, weights, scale, block_size=128)
-    got_docs, got_w = [], []
-    for (bid, first, last, n, dbytes, wbytes, bmax) in blocks:
-        d, w = decode_block(first, n, dbytes, wbytes, scale)
-        assert d[0] == first and d[-1] == last and len(d) == n
-        # block_max is in the quantized int domain (matches encode_groups
-        # and POSTINGS_SCHEMA's 'block_max int')
-        assert isinstance(bmax, int)
-        assert abs(w.max() - bmax / scale) < 1e-12
-        got_docs.append(d)
-        got_w.append(w)
-    got_docs = np.concatenate(got_docs)
-    got_w = np.concatenate(got_w)
-    order = np.argsort(docs, kind="stable")
-    assert np.array_equal(got_docs, docs[order])
-    expected_w = dequantize_weights(quantize_weights(weights[order], scale), scale)
-    assert np.allclose(got_w, expected_w)
-    # docID-ascending across blocks
-    assert np.all(np.diff(got_docs) > 0)
+def test_block_roundtrip(postings, codec, bits, block_size):
+    """encode_groups → decode_blocks is the identity on (shard, term,
+    doc, q) sorted postings, for every codec and weight width; each block
+    is a docID-ascending run of one group with consistent metadata, and
+    the per-block decoder (the query kernel's) agrees with the batch one."""
+    s, t, d, q = (
+        np.array(c, dtype=np.int64) for c in zip(*sorted(postings))
+    )
+    q %= 2**bits
+    g = encode_groups(s, t, d, q, block_size=block_size, bits=bits, codec=codec)
+    n = np.asarray(g["n"], dtype=np.int64)
+    doc, got_q = decode_blocks(
+        g["first_doc"], n, g["doc_bytes"], g["w_bytes"], bits, codec
+    )
+    assert np.array_equal(doc, d) and np.array_equal(got_q, q)
+    assert np.array_equal(np.repeat(g["shard_id"], n), s)
+    assert np.array_equal(np.repeat(g["term_id"], n), t)
+    assert n.min() >= 1 and n.max() <= block_size
+    ends = np.cumsum(n)
+    for b, e in enumerate(ends):
+        lo = e - n[b]
+        assert g["first_doc"][b] == d[lo] and g["last_doc"][b] == d[e - 1]
+        assert g["block_max"][b] == q[lo:e].max()
+        new_group = b == 0 or (s[lo], t[lo]) != (s[lo - 1], t[lo - 1])
+        assert g["block_id"][b] == (0 if new_group else g["block_id"][b - 1] + 1)
+        d1, q1 = decode_block_raw(
+            g["first_doc"][b], n[b], g["doc_bytes"][b], g["w_bytes"][b],
+            bits, codec,
+        )
+        assert np.array_equal(d1, d[lo:e]) and np.array_equal(q1, q[lo:e])
+    # docID-ascending within every (shard, term) group
+    same = (s[1:] == s[:-1]) & (t[1:] == t[:-1])
+    assert np.all(np.diff(d)[same] > 0)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**53 - 1), max_size=500))
@@ -90,17 +106,15 @@ def test_for_roundtrip(values):
 def test_encode_groups_for_equals_varint(postings):
     """encode_groups with codec='for' decodes to the same postings as
     codec='varint' (only doc_bytes representation differs)."""
-    from splade_spark.index.codec import encode_groups
-
     docs = np.sort(np.array([p[0] for p in postings], dtype=np.int64))
     weights = np.array([p[1] for p in postings])
     shard = np.zeros(len(docs), dtype=np.int64)
     term = np.zeros(len(docs), dtype=np.int64)
     scale = 255.0 / 20.0
+    q = quantize_weights(weights, scale)
     decoded = {}
     for codec in ("varint", "for"):
-        g = encode_groups(shard, term, docs, weights, scale,
-                          block_size=64, codec=codec)
+        g = encode_groups(shard, term, docs, q, block_size=64, codec=codec)
         dd, ww = [], []
         for fd, n, db, wb in zip(g["first_doc"], g["n"],
                                  g["doc_bytes"], g["w_bytes"]):
@@ -139,21 +153,17 @@ def test_encode_for_blocks_matches_per_block(blocks):
 def test_decode_block_raw_integer_parity():
     """decode_block_raw returns the quantized int64 weights the WAND kernel
     scores with — dividing by scale must reproduce decode_block exactly."""
-    from splade_spark.index.codec import decode_block_raw, encode_for
-
     rng = np.random.default_rng(7)
     docs = np.sort(rng.choice(10**6, size=300, replace=False)).astype(np.int64)
     weights = rng.uniform(0.01, 20.0, size=300)
     scale = 255.0 / 20.0
+    zero = np.zeros(len(docs), dtype=np.int64)
+    q = quantize_weights(weights, scale)
     for codec in ("varint", "for"):
-        for (bid, first, last, n, dbytes, wbytes, bmax) in encode_blocks(
-            docs, weights, scale, block_size=128
+        g = encode_groups(zero, zero, docs, q, block_size=128, codec=codec)
+        for first, n, dbytes, wbytes in zip(
+            g["first_doc"], g["n"], g["doc_bytes"], g["w_bytes"]
         ):
-            if codec == "for":
-                # encode_blocks always emits varint doc deltas; re-pack
-                # them as FOR so this leg drives BOTH decoders' FOR branch
-                d0, _ = decode_block(first, n, dbytes, wbytes, scale)
-                dbytes = encode_for(np.diff(d0).astype(np.uint64))
             d1, w1 = decode_block(first, n, dbytes, wbytes, scale, codec=codec)
             d2, q2 = decode_block_raw(first, n, dbytes, wbytes, codec=codec)
             assert q2.dtype == np.int64

@@ -22,15 +22,20 @@ def corpus(spark, tiny_documents):
     return tf, w, quantization_scale(w)
 
 
-def test_segment_merge_equals_full_build(spark, corpus, tmp_path):
-    """Two doc-disjoint segments merged == index built over the union."""
-    tf, w, scale = corpus
+@pytest.mark.parametrize("codec,bits", [
+    ("varint", 8), ("varint", 16), ("for", 8), ("for", 16),
+])
+def test_segment_merge_equals_full_build(spark, corpus, tmp_path, codec, bits):
+    """Two doc-disjoint segments merged == index built over the union, for
+    every posting codec and weight width (each drives its own decode
+    branch of the merge)."""
+    tf, w, _ = corpus
+    scale = quantization_scale(w, bits)
     seg_a = w.filter(F.col("doc_id") < 50)
     seg_b = w.filter(F.col("doc_id") >= 50)
     pa, pb, pm, pf = (str(tmp_path / x) for x in ["a", "b", "m", "full"])
-    build_index(seg_a, pa, scale, num_shards=4)
-    build_index(seg_b, pb, scale, num_shards=4)
-    build_index(w, pf, scale, num_shards=4)
+    for src, path in ((seg_a, pa), (seg_b, pb), (w, pf)):
+        build_index(src, path, scale, num_shards=4, bits=bits, codec=codec)
     merge_indexes(spark, [pa, pb], pm)
 
     # strongest form: the merged index is BLOCK-identical to the
@@ -40,8 +45,12 @@ def test_segment_merge_equals_full_build(spark, corpus, tmp_path):
     assert m.exceptAll(f).count() == 0 and f.exceptAll(m).count() == 0
 
     qt = query_term_freqs(queries_df(spark)).cache()
-    res_m = retrieve(load_postings(spark, pm), qt, scale, k=20)
-    res_f = retrieve(load_postings(spark, pf), qt, scale, k=20)
+    res_m = retrieve(
+        load_postings(spark, pm), qt, scale, k=20, bits=bits, codec=codec
+    )
+    res_f = retrieve(
+        load_postings(spark, pf), qt, scale, k=20, bits=bits, codec=codec
+    )
     assert sorted(map(tuple, res_m.collect())) == sorted(map(tuple, res_f.collect()))
 
     # merged blocks remain docID-sorted / non-overlapping per (shard, term)

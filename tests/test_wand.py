@@ -5,8 +5,21 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from splade_spark.index.codec import encode_blocks
+from splade_spark.index.codec import encode_groups, quantize_weights
 from splade_spark.query.wand import _score_query_in_shard
+
+
+def _term_blocks(docs, weights, scale, block_size):
+    """One term's docID-sorted posting list, encoded as a single (shard,
+    term) group → the kernel's (firsts, lasts, block_max, block rows)."""
+    docs = np.asarray(docs, dtype=np.int64)
+    zero = np.zeros(len(docs), dtype=np.int64)
+    g = encode_groups(
+        zero, zero, docs, quantize_weights(np.asarray(weights), scale),
+        block_size=block_size,
+    )
+    rows = list(zip(g["first_doc"], g["n"], g["doc_bytes"], g["w_bytes"]))
+    return g["first_doc"], g["last_doc"], g["block_max"].astype(np.int64), rows
 
 
 def _brute(posting_sets: dict[int, dict[int, int]], qtfs: dict[int, int], k, theta0):
@@ -35,16 +48,9 @@ def test_wand_kernel_matches_brute_force(n_terms, k, theta0, rnd):
         n_docs = rnd.randint(1, 300)
         docs = sorted(rnd.sample(range(0, 1000), n_docs))
         weights = [rnd.uniform(0.01, 20.0) for _ in docs]
-        blocks = encode_blocks(
-            np.array(docs, dtype=np.int64), np.array(weights), scale, block_size=16
-        )
         qtf = rnd.randint(1, 3)
         qtfs[t] = qtf
-        firsts = np.array([b[1] for b in blocks], dtype=np.int64)
-        lasts = np.array([b[2] for b in blocks], dtype=np.int64)
-        bmax = np.array([b[6] for b in blocks], dtype=np.int64)
-        rows = [(b[1], b[3], b[4], b[5]) for b in blocks]
-        terms.append((t, qtf, firsts, lasts, bmax, rows))
+        terms.append((t, qtf, *_term_blocks(docs, weights, scale, 16)))
         q_int = np.rint(np.array(weights) * scale).clip(0, 255).astype(int)
         posting_sets[t] = dict(zip(docs, q_int.tolist()))
 
@@ -62,8 +68,9 @@ def test_wand_kernel_empty():
 
 def test_decode_cache_eviction_identical():
     """Results are identical with a byte-budgeted LRU forced to evict on
-    every block (budget ~one block) vs the unbounded cache — eviction only
-    costs a re-decode (VERDICT r05 #2)."""
+    every block (budget ~one block) vs the default budget, which holds
+    every decoded block here — eviction only costs a re-decode (VERDICT
+    r05 #2)."""
     from splade_spark.query.wand import _BlockCache
 
     rnd = __import__("random").Random(7)
@@ -72,23 +79,15 @@ def test_decode_cache_eviction_identical():
     for t in range(4):
         docs = sorted(rnd.sample(range(0, 2000), 400))
         weights = [rnd.uniform(0.01, 20.0) for _ in docs]
-        blocks = encode_blocks(
-            np.array(docs, dtype=np.int64), np.array(weights), scale,
-            block_size=16,
-        )
-        firsts = np.array([b[1] for b in blocks], dtype=np.int64)
-        lasts = np.array([b[2] for b in blocks], dtype=np.int64)
-        bmax = np.array([b[6] for b in blocks], dtype=np.int64)
-        rows = [(b[1], b[3], b[4], b[5]) for b in blocks]
-        terms.append((t, 2, firsts, lasts, bmax, rows))
+        terms.append((t, 2, *_term_blocks(docs, weights, scale, 16)))
 
-    unbounded = _BlockCache(budget=None)
+    ref = _BlockCache()  # default 1 GiB budget: never evicts on this fixture
     tiny = _BlockCache(budget=1)  # evicts down to a single entry every put
-    d0, s0 = _score_query_in_shard(terms, 25, 0, prune=True, decoded=unbounded)
+    d0, s0 = _score_query_in_shard(terms, 25, 0, prune=True, decoded=ref)
     d1, s1 = _score_query_in_shard(terms, 25, 0, prune=True, decoded=tiny)
     assert d0.tolist() == d1.tolist() and s0.tolist() == s1.tolist()
     assert len(tiny.data) <= 1  # the budget actually forced eviction
-    assert len(unbounded.data) > 1
+    assert len(ref.data) > 1 and ref.nbytes <= ref.budget  # no eviction
 
 
 def test_block_cache_budget_accounting():
