@@ -182,45 +182,51 @@ def main(argv: list[str] | None = None) -> int:
 
         t0 = time.time()
         tr = spark.read.parquet(args.transcripts)
-        docs = build_documents(tr)
-        # cached: consumed by the df aggregation inside bm25_weights,
-        # quantization, and the build shuffle — uncached this lineage
-        # would tokenize the corpus three times. N/avgdl come from the
-        # documents table directly (map-only, no postings-wide shuffle).
-        tf = term_freqs(docs).cache()
-        n, avgdl = corpus_stats_from_docs(docs)
-        _log(f"corpus: N={n} avgdl={avgdl:.2f} ({time.time() - t0:.1f}s)")
-        w = bm25_weights(tf, n, avgdl).select("doc_id", "term_id", "weight")
-        scale = quantization_scale(w)
-        if fmt == "iceberg":
-            from .index.build import build_index_iceberg
-
-            metrics = build_index_iceberg(
-                w, args.table, scale, num_shards=args.shards,
-                codec=args.codec,
-            )
-        else:
-            metrics = build_index(
-                w,
-                args.index,
-                scale,
-                num_shards=args.shards,
-                resume=not args.no_resume,
-                lineage={
-                    "transcripts": args.transcripts,
-                    "n_docs": n,
-                    "avgdl": avgdl,
-                },
-                codec=args.codec,
-            )
-        # doc_map dim table for external-id emission
-        docs.select("doc_id", "conv_id").write.mode("overwrite").parquet(
-            args.index + "_docmap"
-        )
-        # all consumers of the cached term table have run; drop it so a
+        # every frame this build caches (build_documents' doc-id cache and
+        # the term table) is dropped on the way out, error or not, so a
         # caller embedding this entry point in a loop doesn't accumulate
         # pinned cache entries (same discipline as the streaming indexer)
-        tf.unpersist()
+        cached: list = []
+        try:
+            docs = build_documents(tr, cache_registry=cached)
+            # cached: consumed by the df aggregation inside bm25_weights,
+            # quantization, and the build shuffle — uncached this lineage
+            # would tokenize the corpus three times. N/avgdl come from the
+            # documents table directly (map-only, no postings-wide shuffle).
+            tf = term_freqs(docs).cache()
+            cached.append(tf)
+            n, avgdl = corpus_stats_from_docs(docs)
+            _log(f"corpus: N={n} avgdl={avgdl:.2f} ({time.time() - t0:.1f}s)")
+            w = bm25_weights(tf, n, avgdl).select("doc_id", "term_id", "weight")
+            scale = quantization_scale(w)
+            if fmt == "iceberg":
+                from .index.build import build_index_iceberg
+
+                metrics = build_index_iceberg(
+                    w, args.table, scale, num_shards=args.shards,
+                    codec=args.codec,
+                )
+            else:
+                metrics = build_index(
+                    w,
+                    args.index,
+                    scale,
+                    num_shards=args.shards,
+                    resume=not args.no_resume,
+                    lineage={
+                        "transcripts": args.transcripts,
+                        "n_docs": n,
+                        "avgdl": avgdl,
+                    },
+                    codec=args.codec,
+                )
+            # doc_map dim table for external-id emission
+            docs.select("doc_id", "conv_id").write.mode("overwrite").parquet(
+                args.index + "_docmap"
+            )
+        finally:
+            for df in cached:
+                df.unpersist()
         _log(f"build: {json.dumps(metrics)}")
 
     elif args.cmd == "query":

@@ -107,18 +107,24 @@ def merge_indexes(
     if not all(m["codec"] == codec and m["bits"] == bits for m in metas):
         raise ValueError("segments must share posting codec and quantization width")
     # explicit schema: an empty segment (no parquet files under the
-    # partition dirs) fails schema inference; its (None, None) range is
-    # skipped below rather than TypeError-ing against int ranges
+    # partition dirs) fails schema inference
     segs = [
         spark.read.schema(POSTINGS_SCHEMA).parquet(p) for p in segment_paths
     ]
-    ranges = sorted(
-        r
-        for r in (
-            tuple(s.agg(F.min("first_doc"), F.max("last_doc")).collect()[0])
-            for s in segs
+    # every segment's docID range in one aggregate, not one per segment:
+    # the union tagged by input index, grouped by tag (one row per
+    # non-empty segment, so empty segments drop out and the collect is
+    # bounded by the input count)
+    tagged = segs[0].select(F.lit(0).alias("_seg"), "first_doc", "last_doc")
+    for i, s in enumerate(segs[1:], 1):
+        tagged = tagged.unionByName(
+            s.select(F.lit(i).alias("_seg"), "first_doc", "last_doc")
         )
-        if r[0] is not None
+    ranges = sorted(
+        (r[1], r[2])
+        for r in tagged.groupBy("_seg")
+        .agg(F.min("first_doc"), F.max("last_doc"))
+        .collect()
     )
     for (lo_a, hi_a), (lo_b, _hi_b) in zip(ranges, ranges[1:]):
         if lo_b <= hi_a:

@@ -1,11 +1,14 @@
 """Persisted ANN index artifacts: build once, probe many times.
 
-Round-3 gap this closes: ``lsh_cosine_topk`` / ``ivf_cosine_topk``
-(similarity.py) recompute hyperplane signatures / IVF cell assignments over
+``lsh_cosine_topk`` / ``ivf_cosine_topk`` (similarity.py) hash or route
 the WHOLE corpus on every call — fine for one-shot jobs, wrong for a query
-service. The reference-world analogue is PISA holding a built impact index
-between queries (efficient_splade_pisa/README.md:47-59); the repo's own
-BM25 analogue is ``prepare_serving`` (query/wand.py:149).
+service. Here that pass runs once and its output is kept: the analogue of
+PISA holding a built impact index between queries
+(efficient_splade_pisa/README.md:47-59); the repo's own BM25 analogue is
+``prepare_serving`` (query/wand.py). Both paths call the same similarity.py
+primitives — plane derivation, bucket packing, multiprobe sets, k-means
+training, cell assignment, cell probing — so an index built here buckets
+and routes exactly as the per-call path does.
 
 Layout: one parquet table per index, hive-partitioned by the coarse key
 (``bucket`` for LSH, ``cell`` for IVF) with the raw embeddings co-located
@@ -18,8 +21,9 @@ Scale shape: a query batch computes its probe set driver-side (tiny numpy),
 then reads ONLY the probed partitions — Spark's partition pruning turns the
 ``bucket IN (...)`` filter into a directory-level skip, so query cost scales
 with candidate count (probe selectivity), not corpus size. The build is one
-signature/assignment pass (mapInPandas, Arrow-batched) + one shuffle by the
-partition key so each partition directory is written by one task.
+signature/assignment pass (mapInPandas, Arrow-batched, carrying the vector)
++ one shuffle by the partition key so each partition directory is written
+by one task.
 """
 
 from __future__ import annotations
@@ -35,11 +39,15 @@ from pyspark.sql import functions as F
 
 from .similarity import (
     SEED,
-    _kmeans,
-    _normalize,
     brute_cosine_topk,
     bucketed_cosine_topk,
-    seeded_vector_sample,
+    hyperplane_signatures,
+    ivf_cells,
+    ivf_probe_sets,
+    ivf_train,
+    lsh_planes,
+    lsh_probe_sets,
+    probe_union,
 )
 
 ANN_META = "_ann_meta.json"
@@ -62,6 +70,13 @@ def _write_meta(path: str, meta: dict) -> None:
 def read_ann_meta(path: str) -> dict:
     with open(os.path.join(path, ANN_META)) as fh:
         return json.load(fh)
+
+
+def _read_kind(path: str, kind: str) -> dict:
+    meta = read_ann_meta(path)
+    if meta.get("kind") != kind:
+        raise ValueError(f"index at {path} is kind={meta.get('kind')!r}, not {kind}")
+    return meta
 
 
 def _read_probed_partitions(
@@ -149,67 +164,24 @@ def _read_probed_partitions(
     )
 
 
-def _partition_write_tasks(spark: SparkSession) -> int:
-    """Shuffle-partition count for the bucket/cell-partitioned index write.
+def _write_partitioned(rows: DataFrame, path: str, key: str, mode: str) -> None:
+    """Hive-partitioned parquet write by ``key`` (bucket / cell): one
+    shuffle by the key, so each key directory is written by exactly one
+    task (no small-file explosion at high partition counts).
 
-    One output file per populated bucket exists regardless; what the task
-    count sets is how many parquet writers open/commit CONCURRENTLY. The
-    default shuffle partitioning (cores*2 here) left each task serially
-    creating ~30 tiny per-bucket files — measured 14.3 s vs 5.7 s at 8x
-    parallelism for the same 2k-file layout. Derived from the session's
-    parallelism, not a constant, so cluster deployments scale it with
-    executor count."""
-    return max(
+    The shuffle width sets how many parquet writers open/commit
+    CONCURRENTLY, not the file count (one file per populated key either
+    way): the default shuffle partitioning (cores*2 here) left each task
+    serially creating ~30 tiny per-bucket files — measured 14.3 s vs 5.7 s
+    at 8x parallelism for the same 2k-file layout. Derived from the
+    session's parallelism, not a constant, so cluster deployments scale it
+    with executor count."""
+    spark = rows.sparkSession
+    tasks = max(
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
         8 * spark.sparkContext.defaultParallelism,
     )
-
-
-def _lsh_planes(dim: int, nbits: int, seed: int) -> np.ndarray:
-    """The seeded hyperplanes — identical derivation to
-    similarity.hyperplane_signatures, so an index built here yields the
-    same buckets as the per-call path (and the same DuckDB oracle)."""
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((dim, nbits))
-
-
-def _lsh_bucket_rows(
-    embeddings: DataFrame,
-    dim: int,
-    nbits: int,
-    seed: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Single pass: compute the bucket AND carry the embedding in one Arrow
-    kernel (no corpus-vs-signatures self-join — at 100 TB that join is a
-    second full shuffle of the fat vector column for nothing). Shared by
-    build and append so appended rows land in exactly the buckets a full
-    rebuild would produce."""
-    spark = embeddings.sparkSession
-    bp = spark.sparkContext.broadcast(_lsh_planes(dim, nbits, seed))
-
-    def kernel(batches):
-        p = bp.value
-        weights = (1 << np.arange(p.shape[1], dtype=np.uint64)).astype(np.uint64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if mat.shape[1] != p.shape[0]:
-                raise ValueError(
-                    f"embedding dim {mat.shape[1]} != index dim {p.shape[0]}"
-                )
-            bits = (mat @ p) > 0
-            out = pdf[[id_col, vec_col]].copy()
-            out["bucket"] = (
-                (bits.astype(np.uint64) * weights).sum(axis=1).astype(np.int64)
-            )
-            yield out
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        kernel, schema=f"{id_col} long, {vec_col} array<float>, bucket long"
-    )
+    rows.repartition(tasks, key).write.mode(mode).partitionBy(key).parquet(path)
 
 
 def build_lsh_index(
@@ -233,14 +205,9 @@ def build_lsh_index(
     # billions of rows the listing alone is a job, paid on EVERY
     # build/append (for a plain parquet source this count is footer-only)
     n_vectors = embeddings.count()
-    rows = _lsh_bucket_rows(embeddings, dim, nbits, seed, id_col, vec_col)
-    # one shuffle by the partition key → each bucket directory written by
-    # exactly one task (no small-file explosion at high partition counts)
-    (
-        rows.repartition(_partition_write_tasks(embeddings.sparkSession), "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
+    _write_partitioned(
+        hyperplane_signatures(embeddings, nbits, dim, id_col, vec_col, seed),
+        path, "bucket", "overwrite",
     )
     meta = {
         "kind": "lsh",
@@ -258,32 +225,11 @@ def build_lsh_index(
 def lsh_probe_buckets_per_query(
     query_vectors: pd.DataFrame, meta: dict, multiprobe_bits: int = 1
 ) -> dict[str, list[int]]:
-    """Driver-side probe sets, one per query: the query's own bucket plus
-    all buckets within ``multiprobe_bits`` bit flips (0 disables
-    multiprobe). Tiny — n_queries × (1 + nbits) ints for 1-bit
-    multiprobe."""
-    nbits, dim, seed = meta["nbits"], meta["dim"], meta["seed"]
-    qmat = np.array(query_vectors["embedding"].tolist(), dtype=np.float64)
-    if qmat.shape[1] != dim:
-        raise ValueError(
-            f"query dim {qmat.shape[1]} != index dim {dim} (index at "
-            "a different embedding width — rebuild or fix the query side)"
-        )
-    planes = _lsh_planes(dim, nbits, seed)
-    qbits = (qmat @ planes) > 0
-    weights = (1 << np.arange(nbits, dtype=np.uint64)).astype(np.uint64)
-    qbuckets = (qbits.astype(np.uint64) * weights).sum(axis=1).astype(np.int64)
-    out: dict[str, list[int]] = {}
-    for qid, b in zip(query_vectors["query_id"].tolist(), qbuckets.tolist()):
-        probe: set[int] = {b}
-        if multiprobe_bits >= 1:
-            for i in range(nbits):
-                probe.add(b ^ (1 << i))
-                if multiprobe_bits >= 2:
-                    for j in range(i + 1, nbits):
-                        probe.add(b ^ (1 << i) ^ (1 << j))
-        out[qid] = sorted(probe)
-    return out
+    """Per-query probe sets (similarity.lsh_probe_sets) under the index's
+    seeded planes: own bucket plus all buckets within ``multiprobe_bits``
+    bit flips (0 disables multiprobe)."""
+    planes = lsh_planes(meta["dim"], meta["nbits"], meta["seed"])
+    return lsh_probe_sets(query_vectors, planes, multiprobe_bits)
 
 
 def lsh_probe_buckets(
@@ -291,8 +237,39 @@ def lsh_probe_buckets(
 ) -> list[int]:
     """Union of the per-query probe sets — what the partition-pruned scan
     filters on (one scan serves the whole batch)."""
-    per_q = lsh_probe_buckets_per_query(query_vectors, meta, multiprobe_bits)
-    return sorted({b for probes in per_q.values() for b in probes})
+    return probe_union(lsh_probe_buckets_per_query(query_vectors, meta, multiprobe_bits))
+
+
+def _topk_from_probes(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    key: str,
+    key_type: str,
+    per_q: dict[str, list[int]],
+    query_vectors: pd.DataFrame,
+    k: int,
+    probe_scope: str,
+) -> DataFrame:
+    """Partition-pruned scan of the union of ``per_q`` + exact rerank,
+    per query (``per_query``) or over the whole union (``union``)."""
+    if probe_scope not in ("per_query", "union"):
+        raise ValueError(f"probe_scope must be per_query|union, got {probe_scope!r}")
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    # key is the hive partition column → directory-level pruning, done
+    # driver-side before Spark lists the index (one root listing instead
+    # of walking every key directory per call)
+    pruned = _read_probed_partitions(
+        spark, path, key, probe_union(per_q),
+        f"{id_col} long, {vec_col} array<float>, {key} {key_type}",
+    )
+    if probe_scope == "per_query":
+        return bucketed_cosine_topk(
+            pruned, query_vectors, per_q, k, id_col, vec_col, bucket_col=key
+        )
+    return brute_cosine_topk(
+        pruned.select(id_col, vec_col), query_vectors, k, id_col, vec_col
+    )
 
 
 def lsh_topk_from_index(
@@ -317,28 +294,10 @@ def lsh_topk_from_index(
     set — result-identical to ``similarity.lsh_cosine_topk`` at the same
     (nbits, seed, 1-bit multiprobe), whose candidate set is also the
     batch union. Cost |∪ cands| × n_queries; fine for small batches."""
-    meta = read_ann_meta(path)
-    if meta.get("kind") != "lsh":
-        raise ValueError(f"index at {path} is kind={meta.get('kind')!r}, not lsh")
+    meta = _read_kind(path, "lsh")
     per_q = lsh_probe_buckets_per_query(query_vectors, meta, multiprobe_bits)
-    union = sorted({b for probes in per_q.values() for b in probes})
-    # bucket is the hive partition column → directory-level pruning, done
-    # driver-side before Spark lists the index (one root listing instead
-    # of walking all 2^nbits bucket directories per call)
-    pruned = _read_probed_partitions(
-        spark, path, "bucket", union,
-        f"{meta['id_col']} long, {meta['vec_col']} array<float>, bucket long",
-    )
-    if probe_scope == "per_query":
-        return bucketed_cosine_topk(
-            pruned, query_vectors, per_q, k, meta["id_col"], meta["vec_col"],
-            bucket_col="bucket",
-        )
-    if probe_scope != "union":
-        raise ValueError(f"probe_scope must be per_query|union, got {probe_scope!r}")
-    return brute_cosine_topk(
-        pruned.select(meta["id_col"], meta["vec_col"]),
-        query_vectors, k, meta["id_col"], meta["vec_col"],
+    return _topk_from_probes(
+        spark, path, meta, "bucket", "long", per_q, query_vectors, k, probe_scope
     )
 
 
@@ -356,22 +315,15 @@ def append_lsh_index(embeddings: DataFrame, path: str) -> dict:
     ANN analogue of the BM25 side's incremental segment ingest
     (streaming/incremental.py) — grow-only, no merge needed because
     bucket partitions are content-addressed, not ordered."""
-    meta = read_ann_meta(path)
-    if meta.get("kind") != "lsh":
-        raise ValueError(f"index at {path} is kind={meta.get('kind')!r}, not lsh")
+    meta = _read_kind(path, "lsh")
     # count the APPENDED source only (1:1 kernel): recounting the whole
     # index would re-list up to 2^nbits bucket directories per append
     n_new = embeddings.count()
-    rows = _lsh_bucket_rows(
-        embeddings, meta["dim"], meta["nbits"], meta["seed"],
-        meta["id_col"], meta["vec_col"],
+    rows = hyperplane_signatures(
+        embeddings, meta["nbits"], meta["dim"], meta["id_col"], meta["vec_col"],
+        meta["seed"],
     )
-    (
-        rows.repartition(_partition_write_tasks(embeddings.sparkSession), "bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    _write_partitioned(rows, path, "bucket", "append")
     meta["n_vectors"] = meta["n_vectors"] + n_new
     _write_meta(path, meta)
     return meta
@@ -382,39 +334,11 @@ def append_ivf_index(embeddings: DataFrame, path: str) -> dict:
     STORED centroids (the coarse quantizer is frozen at build time, the
     standard IVF contract — re-training would reshuffle existing cells),
     parquet append into the cell partitions, meta recounted."""
-    meta = read_ann_meta(path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"index at {path} is kind={meta.get('kind')!r}, not ivf")
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    dim = meta["dim"]
-    spark = embeddings.sparkSession
+    meta = _read_kind(path, "ivf")
     n_new = embeddings.count()  # 1:1 kernel — no full-index relisting below
     cent = np.array(meta["centroids"], dtype=np.float64)
-    bc = spark.sparkContext.broadcast(cent)
-
-    def assign(batches):
-        c = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = _normalize(np.array(pdf[vec_col].tolist(), dtype=np.float64))
-            if mat.shape[1] != dim:
-                raise ValueError(
-                    f"embedding dim {mat.shape[1]} != index dim {dim}"
-                )
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell"] = (mat @ c.T).argmax(axis=1).astype("int32")
-            yield out
-
-    rows = embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, {vec_col} array<float>, cell int"
-    )
-    (
-        rows.repartition(_partition_write_tasks(embeddings.sparkSession), "cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(path)
-    )
+    rows = ivf_cells(embeddings, cent, meta["id_col"], meta["vec_col"])
+    _write_partitioned(rows, path, "cell", "append")
     meta["n_vectors"] = meta["n_vectors"] + n_new
     _write_meta(path, meta)
     return meta
@@ -434,35 +358,14 @@ def build_ivf_index(
     re-derived from a seed alone, since k-means sees the data).
 
     The coarse quantizer trains on a seeded content-hash sample
-    (seeded_vector_sample), not a head-of-corpus ``limit()`` slice: limit
+    (similarity.ivf_train), not a head-of-corpus ``limit()`` slice: limit
     takes whatever partitions return first, which at 100 TB means one
     day's shard or one tenant trains every cell boundary. The hash sample
     is uniform over the whole corpus and invariant to partition layout."""
-    spark = embeddings.sparkSession
-    sample = seeded_vector_sample(embeddings, sample_size, id_col, vec_col, seed)
-    smat = _normalize(np.array(sample[vec_col].tolist(), dtype=np.float64))
-    cent = _kmeans(smat, n_centroids, seed=seed)
-    bc = spark.sparkContext.broadcast(cent)
-
-    def assign(batches):
-        c = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = _normalize(np.array(pdf[vec_col].tolist(), dtype=np.float64))
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell"] = (mat @ c.T).argmax(axis=1).astype("int32")
-            yield out
-
+    cent = ivf_train(embeddings, n_centroids, sample_size, id_col, vec_col, seed)
     n_vectors = embeddings.count()  # 1:1 kernel — no post-write relisting
-    rows = embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, {vec_col} array<float>, cell int"
-    )
-    (
-        rows.repartition(_partition_write_tasks(embeddings.sparkSession), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
+    _write_partitioned(
+        ivf_cells(embeddings, cent, id_col, vec_col), path, "cell", "overwrite"
     )
     meta = {
         "kind": "ivf",
@@ -481,25 +384,10 @@ def build_ivf_index(
 def ivf_probe_cells_per_query(
     query_vectors: pd.DataFrame, meta: dict, nprobe: int
 ) -> dict[str, list[int]]:
-    """Driver-side probe sets, one per query: the query's nprobe nearest
-    centroid cells."""
+    """Per-query probe sets (similarity.ivf_probe_sets) under the index's
+    stored centroids: each query's nprobe nearest cells."""
     cent = np.array(meta["centroids"], dtype=np.float64)
-    qmat = _normalize(np.array(query_vectors["embedding"].tolist(), dtype=np.float64))
-    if qmat.shape[1] != cent.shape[1]:
-        raise ValueError(
-            f"query dim {qmat.shape[1]} != index dim {cent.shape[1]}"
-        )
-    order = (qmat @ cent.T).argsort(axis=1)[:, ::-1][:, :nprobe]
-    return {
-        qid: sorted(int(c) for c in row)
-        for qid, row in zip(query_vectors["query_id"].tolist(), order)
-    }
-
-
-def ivf_probe_cells(query_vectors: pd.DataFrame, meta: dict, nprobe: int) -> list[int]:
-    """Union of the per-query probe sets (what the pruned scan filters on)."""
-    per_q = ivf_probe_cells_per_query(query_vectors, meta, nprobe)
-    return sorted({c for cells in per_q.values() for c in cells})
+    return ivf_probe_sets(query_vectors, cent, nprobe)
 
 
 def ivf_topk_from_index(
@@ -518,25 +406,8 @@ def ivf_topk_from_index(
     nprobe cells' vectors — served-batch work is Σ_q |cands_q| (see
     lsh_topk_from_index). 'union': every query scores the whole union
     candidate set — the small-batch/legacy shape."""
-    meta = read_ann_meta(path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"index at {path} is kind={meta.get('kind')!r}, not ivf")
+    meta = _read_kind(path, "ivf")
     per_q = ivf_probe_cells_per_query(query_vectors, meta, nprobe)
-    union = sorted({c for cells in per_q.values() for c in cells})
-    # cell is the hive partition column → driver-side directory pruning
-    # (see _read_probed_partitions)
-    pruned = _read_probed_partitions(
-        spark, path, "cell", union,
-        f"{meta['id_col']} long, {meta['vec_col']} array<float>, cell int",
-    )
-    if probe_scope == "per_query":
-        return bucketed_cosine_topk(
-            pruned, query_vectors, per_q, k, meta["id_col"], meta["vec_col"],
-            bucket_col="cell",
-        )
-    if probe_scope != "union":
-        raise ValueError(f"probe_scope must be per_query|union, got {probe_scope!r}")
-    return brute_cosine_topk(
-        pruned.select(meta["id_col"], meta["vec_col"]),
-        query_vectors, k, meta["id_col"], meta["vec_col"],
+    return _topk_from_probes(
+        spark, path, meta, "cell", "int", per_q, query_vectors, k, probe_scope
     )

@@ -6,10 +6,18 @@
   window merge — same partial-topk shape as the retrieval engine.
 - random-hyperplane LSH: the scale path. Sign-bit signatures bucket the
   corpus; queries probe their own bucket (+ multiprobe neighbors), exact
-  rerank inside buckets. Candidate generation is an equi-join, so it
-  shuffles once and never goes quadratic.
+  rerank inside buckets.
+- IVF: a seeded k-means coarse quantizer routes each vector to one cell;
+  queries probe their nprobe nearest cells, exact rerank inside.
 - cosine near-duplicate pairs: bucket-join + exact verify, for
   embedding-based dedup of training corpora.
+
+Each ANN decision has one implementation here, shared with the persisted
+index (ann_index.py): ``lsh_planes`` / ``lsh_buckets`` / ``lsh_probe_sets``
+and ``ivf_train`` / ``ivf_cells`` / ``ivf_probe_sets``. The corpus-side
+kernels (``hyperplane_signatures``, ``ivf_cells``) emit (id, vec, key) in
+one Arrow pass, so candidates are a filter on that output — no second scan
+of the corpus and no join back to it.
 
 A pure-SQL brute-force variant (explode + join + groupBy) is provided for
 DuckDB oracle parity — same math, all built-ins.
@@ -31,6 +39,10 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(mat, axis=1, keepdims=True)
     n[n == 0] = 1.0
     return mat / n
+
+
+def _vectors(col: pd.Series) -> np.ndarray:
+    return np.array(col.tolist(), dtype=np.float64)
 
 
 def seeded_vector_sample(
@@ -78,7 +90,7 @@ def brute_cosine_topk(
     (cosine desc, vec_id asc)."""
     spark = embeddings.sparkSession
     qids = query_vectors["query_id"].tolist()
-    qmat = _normalize(np.array(query_vectors["embedding"].tolist(), dtype=np.float64))
+    qmat = _normalize(_vectors(query_vectors["embedding"]))
     bq = spark.sparkContext.broadcast((qids, qmat))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -88,7 +100,7 @@ def brute_cosine_topk(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            mat = _normalize(np.array(pdf[vec_col].tolist(), dtype=np.float64))
+            mat = _normalize(_vectors(pdf[vec_col]))
             sims = mat @ qmat_.T  # (batch, nq)
             kk = min(k, len(ids))
             top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, nq)
@@ -137,7 +149,7 @@ def bucketed_cosine_topk(
     pair is produced twice and no dedup pass is needed."""
     spark = candidates.sparkSession
     qids = query_vectors["query_id"].tolist()
-    qmat = _normalize(np.array(query_vectors["embedding"].tolist(), dtype=np.float64))
+    qmat = _normalize(_vectors(query_vectors["embedding"]))
     b2q: dict[int, list[int]] = {}
     for qi, qid in enumerate(qids):
         for b in query_probes[qid]:
@@ -162,7 +174,7 @@ def bucketed_cosine_topk(
                 if qidx is None:
                     continue
                 ids = grp[id_col].to_numpy()
-                mat = _normalize(np.array(grp[vec_col].tolist(), dtype=np.float64))
+                mat = _normalize(_vectors(grp[vec_col]))
                 sims = mat @ qmat_[qidx].T  # (bucket_rows, n_probing_queries)
                 kk = min(k, len(ids))
                 top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
@@ -232,6 +244,79 @@ def cosine_topk_sql(
     )
 
 
+def _check_dim(mat: np.ndarray, dim: int) -> None:
+    if mat.shape[1] != dim:
+        raise ValueError(f"embedding dim {mat.shape[1]} != index dim {dim}")
+
+
+def probe_union(per_query: dict[str, list[int]]) -> list[int]:
+    """Union of per-query probe sets — what one pruned scan filters on."""
+    return sorted({p for probes in per_query.values() for p in probes})
+
+
+def _keyed_rows(
+    embeddings: DataFrame, model: np.ndarray, key_fn, key: str, key_type: str,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """(id, vec, key): ``key_fn(batch matrix, model)`` per Arrow batch, the
+    vector carried through the same pass — callers filter or write the
+    output directly, never join it back to the corpus."""
+    bm = embeddings.sparkSession.sparkContext.broadcast(model)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        m = bm.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out = pdf[[id_col, vec_col]].copy()
+            out[key] = key_fn(_vectors(pdf[vec_col]), m)
+            yield out
+
+    # the source's own element type, so a rerank over this output scores
+    # exactly the input vectors (array<float> sources: the index layout)
+    vec_type = embeddings.schema[vec_col].dataType.simpleString()
+    return embeddings.select(id_col, vec_col).mapInPandas(
+        kernel, schema=f"{id_col} long, {vec_col} {vec_type}, {key} {key_type}"
+    )
+
+
+def lsh_planes(dim: int, nbits: int, seed: int = SEED) -> np.ndarray:
+    """The seeded (dim, nbits) hyperplanes. Re-derived, never stored: the
+    per-call paths and the persisted index (its meta keeps dim/nbits/seed)
+    draw them here, so both bucket a vector identically."""
+    return np.random.default_rng(seed).standard_normal((dim, nbits))
+
+
+def lsh_buckets(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Sign bit of each row's projection on each plane, packed into an
+    int64 bucket id (bit i = plane i)."""
+    _check_dim(mat, planes.shape[0])
+    weights = (1 << np.arange(planes.shape[1], dtype=np.uint64)).astype(np.uint64)
+    bits = (mat @ planes) > 0
+    return (bits.astype(np.uint64) * weights).sum(axis=1).astype(np.int64)
+
+
+def lsh_probe_sets(
+    query_vectors: pd.DataFrame, planes: np.ndarray, multiprobe_bits: int = 1
+) -> dict[str, list[int]]:
+    """Driver-side probe sets, one per query: the query's own bucket plus
+    all buckets within ``multiprobe_bits`` (0–2) bit flips. Tiny —
+    n_queries × (1 + nbits) ints for 1-bit multiprobe."""
+    nbits = planes.shape[1]
+    qbuckets = lsh_buckets(_vectors(query_vectors["embedding"]), planes)
+    out: dict[str, list[int]] = {}
+    for qid, b in zip(query_vectors["query_id"].tolist(), qbuckets.tolist()):
+        probe: set[int] = {b}
+        if multiprobe_bits >= 1:
+            for i in range(nbits):
+                probe.add(b ^ (1 << i))
+                if multiprobe_bits >= 2:
+                    for j in range(i + 1, nbits):
+                        probe.add(b ^ (1 << i) ^ (1 << j))
+        out[qid] = sorted(probe)
+    return out
+
+
 def hyperplane_signatures(
     embeddings: DataFrame,
     nbits: int = 16,
@@ -240,27 +325,13 @@ def hyperplane_signatures(
     vec_col: str = "embedding",
     seed: int = SEED,
 ) -> DataFrame:
-    """(id, bucket long): sign-bit signature under seeded random hyperplanes."""
+    """(id, vec, bucket long): sign-bit signature under seeded random
+    hyperplanes, computed in one Arrow pass that carries the vector."""
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, nbits))
-    spark = embeddings.sparkSession
-    bp = spark.sparkContext.broadcast(planes)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = bp.value
-        weights = (1 << np.arange(p.shape[1], dtype=np.uint64)).astype(np.uint64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            bits = (mat @ p) > 0
-            bucket = (bits.astype(np.uint64) * weights).sum(axis=1).astype(np.int64)
-            yield pd.DataFrame({id_col: pdf[id_col], "bucket": bucket})
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        kernel, schema=f"{id_col} long, bucket long"
+    return _keyed_rows(
+        embeddings, lsh_planes(dim, nbits, seed), lsh_buckets, "bucket", "long",
+        id_col, vec_col,
     )
 
 
@@ -276,21 +347,9 @@ def lsh_cosine_topk(
     """ANN: probe the query's LSH bucket and its 1-bit-flip neighbors,
     exact-rerank candidates. Approximate — recall depends on nbits."""
     dim = len(query_vectors["embedding"].iloc[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, nbits))
-    qmat = np.array(query_vectors["embedding"].tolist(), dtype=np.float64)
-    qbits = (qmat @ planes) > 0
-    weights = (1 << np.arange(nbits, dtype=np.uint64)).astype(np.uint64)
-    qbuckets = (qbits.astype(np.uint64) * weights).sum(axis=1).astype(np.int64)
-    # multiprobe: own bucket + all 1-bit flips
-    probe = set()
-    for b in qbuckets.tolist():
-        probe.add(b)
-        for i in range(nbits):
-            probe.add(b ^ (1 << i))
+    probe = probe_union(lsh_probe_sets(query_vectors, lsh_planes(dim, nbits, seed)))
     sigs = hyperplane_signatures(embeddings, nbits, dim, id_col, vec_col, seed)
-    cand_ids = sigs.filter(F.col("bucket").isin(list(probe))).select(id_col)
-    cands = embeddings.join(cand_ids, id_col, "left_semi")
+    cands = sigs.filter(F.col("bucket").isin(probe))
     return brute_cosine_topk(cands, query_vectors, k, id_col, vec_col)
 
 
@@ -322,6 +381,50 @@ def _kmeans(sample: np.ndarray, n_centroids: int, iters: int = 8, seed: int = SE
     return cent
 
 
+def ivf_train(
+    embeddings: DataFrame,
+    n_centroids: int,
+    sample_size: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = SEED,
+) -> np.ndarray:
+    """The coarse quantizer: seeded k-means on a content-hash sample
+    (seeded_vector_sample — uniform over the corpus, layout-invariant).
+    Returns unit-normalized centroids, shape (n_centroids, dim)."""
+    sample = seeded_vector_sample(embeddings, sample_size, id_col, vec_col, seed)
+    return _kmeans(_normalize(_vectors(sample[vec_col])), n_centroids, seed=seed)
+
+
+def _nearest_cell(mat: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    _check_dim(mat, cent.shape[1])
+    return (_normalize(mat) @ cent.T).argmax(axis=1).astype(np.int32)
+
+
+def ivf_cells(
+    embeddings: DataFrame,
+    cent: np.ndarray,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, vec, cell int): each vector routed to its nearest centroid
+    (cosine) in one Arrow pass that carries the vector."""
+    return _keyed_rows(embeddings, cent, _nearest_cell, "cell", "int", id_col, vec_col)
+
+
+def ivf_probe_sets(
+    query_vectors: pd.DataFrame, cent: np.ndarray, nprobe: int
+) -> dict[str, list[int]]:
+    """Driver-side probe sets, one per query: its nprobe nearest cells."""
+    qmat = _vectors(query_vectors["embedding"])
+    _check_dim(qmat, cent.shape[1])
+    order = (_normalize(qmat) @ cent.T).argsort(axis=1)[:, ::-1][:, :nprobe]
+    return {
+        qid: sorted(int(c) for c in row)
+        for qid, row in zip(query_vectors["query_id"].tolist(), order)
+    }
+
+
 def ivf_cosine_topk(
     embeddings: DataFrame,
     query_vectors: pd.DataFrame,
@@ -340,32 +443,11 @@ def ivf_cosine_topk(
     At 100 TB the cell assignment is one mapInPandas pass (matmul per Arrow
     batch) and a write partitioned by cell; queries touch nprobe cells —
     partition pruning does the rest."""
-    spark = embeddings.sparkSession
-    sample = seeded_vector_sample(embeddings, sample_size, id_col, vec_col, seed)
-    smat = _normalize(np.array(sample[vec_col].tolist(), dtype=np.float64))
-    cent = _kmeans(smat, n_centroids, seed=seed)
-    bc = spark.sparkContext.broadcast(cent)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = _normalize(np.array(pdf[vec_col].tolist(), dtype=np.float64))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "cell": (mat @ c.T).argmax(axis=1)}
-            )
-
-    cells = embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, cell int"
+    cent = ivf_train(embeddings, n_centroids, sample_size, id_col, vec_col, seed)
+    probe = probe_union(ivf_probe_sets(query_vectors, cent, nprobe))
+    cands = ivf_cells(embeddings, cent, id_col, vec_col).filter(
+        F.col("cell").isin(probe)
     )
-    qmat = _normalize(np.array(query_vectors["embedding"].tolist(), dtype=np.float64))
-    probe_cells = set(
-        int(c) for row in (qmat @ cent.T).argsort(axis=1)[:, ::-1][:, :nprobe]
-        for c in row
-    )
-    cand_ids = cells.filter(F.col("cell").isin(list(probe_cells))).select(id_col)
-    cands = embeddings.join(cand_ids, id_col, "left_semi")
     return brute_cosine_topk(cands, query_vectors, k, id_col, vec_col)
 
 
@@ -406,10 +488,14 @@ def cosine_near_dup_pairs(
     split can separate) this still yields every member's duplicate edge;
     pairs in an oversized bucket whose cosine ≥ tau with each other but
     not with the representative are the accepted recall trade."""
-    sigs = hyperplane_signatures(embeddings, nbits, dim, id_col, vec_col, seed)
-    e = embeddings.join(sigs, id_col)
+    # one shuffle by bucket up front: every consumer below is clustered by
+    # bucket, so both self-join sides reuse that exchange and the
+    # signature kernel runs once instead of once per side
+    e = hyperplane_signatures(
+        embeddings, nbits, dim, id_col, vec_col, seed
+    ).repartition("bucket")
     if max_bucket_size is not None:
-        stats = sigs.groupBy("bucket").agg(
+        stats = e.groupBy("bucket").agg(
             F.count("*").alias("_bsize"), F.min(id_col).alias("_rep")
         )
         # stats has at most 2^nbits rows by construction (bucket is an

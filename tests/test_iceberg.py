@@ -1,8 +1,9 @@
 """Iceberg index path (north rule names Iceberg tables explicitly).
 
-The sandbox image carries no iceberg-spark-runtime jar, so the round-trip
-test self-skips; the capability guard, the auto-fallback, and the identical
-partition layout between sinks are asserted unconditionally.
+Without an iceberg-spark-runtime jar on the classpath the round-trip test
+self-skips; the capability guards, the auto-fallback, the sink's writer
+calls (stubbed) and the meta read-back (stub session) are asserted
+unconditionally.
 """
 
 from __future__ import annotations
@@ -41,6 +42,105 @@ def test_guard_raises_without_runtime(spark, weights):
         write_postings_iceberg(
             build_postings(w, scale, num_shards=4), "local.db.t", 4
         )
+
+
+def test_build_index_iceberg_guard(spark, weights, monkeypatch):
+    """The Iceberg build refuses to run without the runtime, before any
+    job: the guard sits in front of the write, never after a full encode."""
+    import splade_spark.index.build as build_mod
+
+    monkeypatch.setattr(build_mod, "iceberg_available", lambda spark: False)
+    w, scale = weights
+    with pytest.raises(RuntimeError, match="Iceberg runtime"):
+        build_index_iceberg(w, "local.db.t", scale, num_shards=4)
+
+
+class _Writer:
+    """Stands in for the arranged postings and the DataFrameWriterV2 they
+    open; records the calls the Iceberg sink makes."""
+
+    def __init__(self):
+        self.calls = []
+
+    def _record(self, *call):
+        self.calls.append(call)
+        return self
+
+    def writeTo(self, table):
+        return self._record("writeTo", table)
+
+    def tableProperty(self, k, v):
+        return self._record("tableProperty", k, v)
+
+    def partitionedBy(self, col):
+        return self._record("partitionedBy", str(col))
+
+    def createOrReplace(self):
+        self._record("createOrReplace")
+
+
+def test_write_postings_iceberg_publishes_meta_with_data(monkeypatch):
+    """Meta properties ride on the same createOrReplace commit as the
+    data, on the sink arrangement, partitioned by shard_id."""
+    import splade_spark.index.build as build_mod
+
+    writer, arranged = _Writer(), []
+
+    def fake_arrange(postings, num_shards):
+        arranged.append(num_shards)
+        return writer
+
+    monkeypatch.setattr(build_mod, "iceberg_available", lambda spark: True)
+    monkeypatch.setattr(build_mod, "arrange_for_sink", fake_arrange)
+    postings = type("P", (), {"sparkSession": None})()
+    write_postings_iceberg(
+        postings, "local.db.t", 4,
+        properties={"splade.scale": 2.5, "splade.bits": 8},
+    )
+    assert arranged == [4]
+    assert writer.calls == [
+        ("writeTo", "local.db.t"),
+        ("tableProperty", "splade.scale", "2.5"),
+        ("tableProperty", "splade.bits", "8"),
+        ("partitionedBy", str(F.col("shard_id"))),
+        ("createOrReplace",),
+    ]
+
+
+class _PropsSession:
+    """Stub session whose SHOW TBLPROPERTIES returns the given rows."""
+
+    def __init__(self, props):
+        self.props = props
+        self.queries = []
+
+    def sql(self, q):
+        self.queries.append(q)
+        rows = [{"key": k, "value": v} for k, v in self.props.items()]
+        return type("R", (), {"collect": lambda self_: rows})()
+
+
+def test_read_index_meta_iceberg_fills_defaults():
+    """A table written before bits/codec were recorded reads back with
+    META_DEFAULTS; a stored width past 16 bits is rejected."""
+    from splade_spark.index.build import META_DEFAULTS
+
+    props = {
+        "splade.scale": "12.5", "splade.num_shards": "4",
+        "splade.block_size": "128", "owner": "x",
+    }
+    sess = _PropsSession(props)
+    meta = read_index_meta_iceberg(sess, "local.db.t")
+    assert sess.queries == ["SHOW TBLPROPERTIES local.db.t"]
+    assert meta == {
+        "scale": 12.5, "num_shards": 4, "block_size": 128, **META_DEFAULTS,
+    }
+    props.update({"splade.bits": "16", "splade.codec": "for"})
+    meta = read_index_meta_iceberg(_PropsSession(props), "local.db.t")
+    assert (meta["bits"], meta["codec"]) == (16, "for")
+    props["splade.bits"] = "17"
+    with pytest.raises(ValueError, match="bits must be in"):
+        read_index_meta_iceberg(_PropsSession(props), "local.db.t")
 
 
 def test_cli_auto_falls_back_to_parquet(spark, tmp_path, tiny_documents):

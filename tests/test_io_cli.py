@@ -167,6 +167,32 @@ def test_cli_end_to_end(spark, tmp_path):
     assert main(["evaluate", "--run", rdir, "--qrels", str(qrels)]) == 0
 
 
+def test_cli_build_unpersists_its_caches(spark, tmp_path, monkeypatch):
+    """`cli build` pins the doc-id and term-table caches only while it runs:
+    the persistent-RDD count is the same before and after, also when the
+    index write fails."""
+    import splade_spark.index.build as build_mod
+    from splade_spark.cli import main
+
+    def persistent():  # getPersistentRDDs() is a snapshot: re-read it
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    tdir = str(tmp_path / "t")
+    assert main(["synth", "--out", tdir, "--conversations", "20"]) == 0
+    before = persistent()
+    args = ["build", "--transcripts", tdir, "--shards", "4", "--index"]
+    assert main(args + [str(tmp_path / "i")]) == 0
+    assert persistent() == before
+
+    def failing_build(*a, **kw):
+        raise RuntimeError("injected build failure")
+
+    monkeypatch.setattr(build_mod, "build_index", failing_build)
+    with pytest.raises(RuntimeError, match="injected build failure"):
+        main(args + [str(tmp_path / "j")])
+    assert persistent() == before
+
+
 def test_anserini_export_half_even_rounding(spark, tmp_path):
     """Reference parity: the export quantizes with np.rint — HALF_EVEN
     (splade/tasks/transformer_evaluator.py:229). A weight product landing

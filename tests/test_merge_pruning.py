@@ -117,6 +117,35 @@ def test_prune_quantile_vs_duckdb(spark, corpus):
     assert got == exp
 
 
+def test_merge_rejects_overlapping_docid_ranges(spark, corpus, tmp_path):
+    """Two independent builds that both start doc ids at 0 would alias
+    different documents: the merge must refuse them before writing."""
+    import os
+
+    tf, w, scale = corpus
+    pa, pb, pm = (str(tmp_path / x) for x in ["a", "b", "m"])
+    build_index(w.filter(F.col("doc_id") < 50), pa, scale, num_shards=4)
+    build_index(w.filter(F.col("doc_id") < 30), pb, scale, num_shards=4)
+    with pytest.raises(ValueError, match="segment docID ranges overlap"):
+        merge_indexes(spark, [pa, pb], pm)
+    assert not os.path.exists(pm)
+
+
+def test_merge_skips_empty_segment(spark, corpus, tmp_path):
+    """An empty segment has no docID range; it takes no part in the
+    overlap check and the merge equals the merge without it."""
+    tf, w, scale = corpus
+    pa, pe, pb, pm, pr = (str(tmp_path / x) for x in ["a", "e", "b", "m", "r"])
+    build_index(w.filter(F.col("doc_id") < 50), pa, scale, num_shards=4)
+    build_index(w.filter(F.lit(False)), pe, scale, num_shards=4)
+    build_index(w.filter(F.col("doc_id") >= 50), pb, scale, num_shards=4)
+    merge_indexes(spark, [pe, pa, pb], pm)
+    merge_indexes(spark, [pa, pb], pr)
+    m, r = load_postings(spark, pm), load_postings(spark, pr)
+    assert m.count() > 0
+    assert m.exceptAll(r).count() == 0 and r.exceptAll(m).count() == 0
+
+
 def test_merge_killed_before_meta_is_rerunnable(spark, corpus, tmp_path):
     """A merge killed between the postings write and the meta write leaves
     an index the query path cannot open; re-running the merge must be

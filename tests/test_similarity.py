@@ -10,6 +10,7 @@ from splade_spark.pipeline.similarity import (
     cosine_near_dup_pairs,
     cosine_topk_sql,
     hyperplane_signatures,
+    ivf_cosine_topk,
     lsh_cosine_topk,
 )
 
@@ -69,6 +70,20 @@ def test_lsh_topk_recall(emb, qvecs):
     e_set = {(r.query_id, r.vec_id) for r in exact}
     a_set = {(r.query_id, r.vec_id) for r in approx}
     assert len(e_set & a_set) >= len(e_set) // 2
+
+
+def test_per_call_ann_plans_scan_corpus_once(spark, qvecs):
+    """The per-call LSH and IVF paths filter the kernel's (id, vec, key)
+    output directly: the plan reads the embeddings source once and holds
+    no semi-join back to it (the IVF training sample is its own job)."""
+    src = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    for res in (
+        lsh_cosine_topk(src, qvecs, k=5, nbits=8),
+        ivf_cosine_topk(src, qvecs, k=5, n_centroids=4, nprobe=2),
+    ):
+        plan = res._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Relation ") == 1, plan
+        assert "LeftSemi" not in plan, plan
 
 
 def test_signatures_deterministic(emb):
