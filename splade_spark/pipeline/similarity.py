@@ -495,17 +495,16 @@ def cosine_near_dup_pairs(
         embeddings, nbits, dim, id_col, vec_col, seed
     ).repartition("bucket")
     if max_bucket_size is not None:
-        stats = e.groupBy("bucket").agg(
-            F.count("*").alias("_bsize"), F.min(id_col).alias("_rep")
+        # bucket size and min-id representative as windows over the bucket
+        # exchange (already clustered by bucket, so no second shuffle):
+        # every branch below reads that one exchange, so the signature
+        # kernel runs once
+        w = Window.partitionBy("bucket")
+        e = e.select(
+            "*",
+            F.count(F.lit(1)).over(w).alias("_bsize"),
+            F.min(id_col).over(w).alias("_rep"),
         )
-        # stats has at most 2^nbits rows by construction (bucket is an
-        # nbits-bit signature), so for nbits <= 16 it is provably tiny
-        # (<= 65536 × ~24 B) and broadcast unconditionally — no reliance on
-        # AQE being enabled, no counting job. Beyond that the bucket count
-        # can approach n, so let Spark/AQE pick the strategy.
-        if nbits <= 16:
-            stats = F.broadcast(stats)
-        e = e.join(stats, "bucket")
         small = e.filter(F.col("_bsize") <= max_bucket_size)
         big = e.filter(F.col("_bsize") > max_bucket_size)
         small_pairs = _bucket_self_join(small, id_col, vec_col)
@@ -516,7 +515,7 @@ def cosine_near_dup_pairs(
         )
         # reps is one row (with a full embedding) PER oversized bucket —
         # usually tiny, but a pathological corpus can have ~n/cap of them,
-        # so no force-broadcast here either; AQE broadcasts when it fits
+        # so no force-broadcast here; AQE broadcasts when it fits
         big_pairs = (
             big.filter(F.col(id_col) != F.col("_rep"))
             .select("bucket", F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))

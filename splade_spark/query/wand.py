@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..index.codec import check_bits, decode_block_raw
+from ..session import local_frame
 
 CHUNK = 32  # intervals scored in the FIRST refinement round
 CHUNK_MAX = 512  # cap for the geometrically-growing later rounds
@@ -267,6 +268,15 @@ def retrieve(
     Returns (query_id, doc_id, score double, rank int), rank-identical to
     ``bm25.bm25_topk`` on integer-quantized weights.
 
+    query_terms already on the driver take the query-service path, read
+    without a Spark job: a pandas frame, or a local Spark frame
+    (``isLocal()``, e.g. ``query_term_freqs`` over
+    ``createDataFrame(pandas)``). Any other frame is collected by one
+    job. The driver merge returns a local frame too, so a warm
+    single-query call on ``prepare_serving`` postings with
+    ``num_shards`` given runs exactly one Spark job, the kernel stage —
+    also for an OOV or empty query.
+
     num_shards: pass the value from _index_meta.json — when omitted, an
     extra max(shard_id) Spark job runs per batch (a term-filtered postings
     scan in a query-serving loop) before the merge is chosen. bits:
@@ -304,7 +314,11 @@ def retrieve(
         # query-service path: terms already driver-side, skip the Spark job
         qpdf = query_terms[["query_id", "term_id", "qtf"]]
     else:
-        qpdf = query_terms.select("query_id", "term_id", "qtf").toPandas()
+        # a local frame (query_term_freqs over createDataFrame(pandas))
+        # folds the projection into its LocalRelation, so this collect runs
+        # no job; any other frame is read by one job
+        cols = ["query_id", "term_id", "qtf"]
+        qpdf = pd.DataFrame(query_terms.select(*cols).collect(), columns=cols)
     # term pruning: small term sets go in as an INSET literal (pushed into
     # the parquet scan as row-group stats filters); large batches use a
     # broadcast semi-join instead — a thousands-literal isin() costs seconds
@@ -427,10 +441,12 @@ def retrieve(
         # this: its job runs after retrieve() returns.)
         bq.unpersist(blocking=False)
         if len(pdf) == 0:
-            merged = pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": [], "rank": []}
+            # a local frame even when empty: the caller's collect of an OOV
+            # or empty query runs no job
+            return local_frame(
+                spark, {"query_id": [], "doc_id": [], "score": [], "rank": []},
+                out_schema,
             )
-            return spark.createDataFrame(merged, schema=out_schema)
         # one vectorized global merge instead of a per-query pandas groupby
         # loop (5000-query batches spent ~as long in frame construction as
         # in scoring): lexsort the whole collect by (group, score desc,
@@ -447,15 +463,16 @@ def retrieve(
         sizes = np.diff(np.concatenate((group_starts, [len(qs)])))
         pos = np.arange(len(qs)) - np.repeat(group_starts, sizes)
         keep = pos < k
-        merged = pd.DataFrame(
+        return local_frame(
+            spark,
             {
                 "query_id": quniq.to_numpy(dtype=object)[qs[keep]],
                 "doc_id": docs[order][keep],
                 "score": scores[order][keep] / float(scale),
                 "rank": (pos[keep] + 1).astype(np.int32),
-            }
+            },
+            out_schema,
         )
-        return spark.createDataFrame(merged, schema=out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_int").desc(), F.col("doc_id").asc()
     )

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -85,3 +85,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, columns: dict, schema) -> DataFrame:
+    """Driver-held columns as a frame whose plan is a ``LocalRelation``.
+
+    Reading such a frame back (``collect``, ``isLocal``) runs no Spark job.
+    Built from an Arrow table, because ``createDataFrame(pandas)`` falls
+    back to an RDD, whose every read is a job, for an empty frame or with
+    Arrow conversion off. Above ``spark.sql.execution.arrow.
+    localRelationThreshold`` Spark itself keeps the rows in an RDD instead;
+    the rows are the same either way."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)

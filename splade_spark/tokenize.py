@@ -6,7 +6,9 @@ lowercase [a-z0-9]+ tokens with BM25 weighting. Pure JVM-side Spark SQL —
 lower / split / explode / groupBy — no Python in the hot path (whole-stage
 codegen end to end). The (doc, term) count aggregation is the analogue of
 the reference's splade_max pooling (reference agg over sequence positions;
-ours: tf over token positions).
+ours: tf over token positions). The one driver-side step is counting qtf
+for a query frame already held on the driver (see query_term_freqs); its
+tokens and ids still come from these JVM expressions.
 
 term_id is xxhash64(term): stable, shuffle-free (no global dictionary
 build), collision probability ~n²/2^64 — negligible even at 10^9 distinct
@@ -15,8 +17,13 @@ terms. The stats table retains the term string for debugging/export.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .session import local_frame
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -62,15 +69,57 @@ def scrub_terms(term_rows: DataFrame, sentinel_terms: list[str]) -> DataFrame:
 
 
 def query_term_freqs(queries: DataFrame) -> DataFrame:
-    """(query_id, term, term_id, qtf) — query-side sparse vectors.
+    """(query_id, term, qtf, term_id) — query-side sparse vectors.
 
     Duplicate query terms accumulate multiplicity (qtf), mirroring how the
-    reference's query rep accumulates weight on repeated activations.
+    reference's query rep accumulates weight on repeated activations; rows
+    sharing a query_id merge into one vector.
+
+    Term strings and ids always come from the document side's JVM
+    expressions (``tokens_col``, ``xxhash64``). A local frame — rows
+    already on the driver, as after ``createDataFrame(pandas)`` — is
+    reduced on the driver: Spark folds the projection over its
+    ``LocalRelation`` (``ConvertToLocalRelation``), so the collect runs no
+    job, qtf is counted here, and the result is again a local frame, which
+    ``retrieve`` reads without a job. A warm single-query serving call thus
+    runs one Spark job, the kernel stage, instead of three. Any other frame
+    takes the explode + groupBy reducer. Both paths give the same rows and
+    schema. The local path's driver memory is linear in the rows the
+    driver already holds (Spark keeps a frame local only up to
+    ``spark.sql.execution.arrow.localRelationThreshold``).
     """
-    toks = tokenize(queries)
-    return (
-        toks.select("query_id", F.explode("tokens").alias("term"))
-        .groupBy("query_id", "term")
-        .agg(F.count("*").alias("qtf"))
-        .withColumn("term_id", F.xxhash64("term"))
+    terms = queries.select("query_id", tokens_col(F.col("text")).alias("terms"))
+    if not queries.isLocal():
+        return (
+            terms.select("query_id", F.explode("terms").alias("term"))
+            .groupBy("query_id", "term")
+            .agg(F.count("*").alias("qtf"))
+            .withColumn("term_id", F.xxhash64("term"))
+        )
+    rows = terms.select(
+        "query_id", "terms", F.transform("terms", lambda t: F.xxhash64(t))
+    ).collect()
+    qtf = Counter(
+        (qid, term, tid)
+        for qid, ts, tids in rows
+        for term, tid in zip(ts or (), tids or ())
+    )
+    keys = list(qtf)
+    schema = StructType(
+        [
+            queries.schema["query_id"],
+            StructField("term", StringType(), False),
+            StructField("qtf", LongType(), False),
+            StructField("term_id", LongType(), False),
+        ]
+    )
+    return local_frame(
+        queries.sparkSession,
+        {
+            "query_id": [k[0] for k in keys],
+            "term": [k[1] for k in keys],
+            "qtf": list(qtf.values()),
+            "term_id": [k[2] for k in keys],
+        },
+        schema,
     )

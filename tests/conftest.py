@@ -40,3 +40,27 @@ def tiny_documents(spark, tiny_transcripts):
     from splade_spark.documents import build_documents
 
     return build_documents(tiny_transcripts, partitions=4).cache()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """spark_jobs(fn) -> (fn(), number of Spark jobs fn started).
+
+    Jobs are tagged with a fresh job group and counted once the listener
+    bus has drained, so a job still in flight on the bus is not missed."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted by the spark_jobs fixture")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

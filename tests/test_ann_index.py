@@ -156,6 +156,61 @@ def test_probe_conf_restored_under_concurrent_reads(spark, tmp_path, monkeypatch
     assert final == original
 
 
+@pytest.fixture(scope="module")
+def wide_index(spark, tmp_path_factory):
+    """A hive-partitioned index with 200 populated bucket directories."""
+    p = str(tmp_path_factory.mktemp("ann") / "wide_idx")
+    rows = spark.range(0, 1000).withColumn("bucket", F.col("id") % 200)
+    rows.repartition(4, "bucket").write.partitionBy("bucket").parquet(p)
+    everything = {(r.id, r.bucket) for r in spark.read.parquet(p).collect()}
+    return p, everything
+
+
+def _probed_read(spark, monkeypatch, path, probes):
+    """_read_probed_partitions' rows, the paths it handed the reader and
+    its optimized plan."""
+    seen = []
+    original = DataFrameReader.parquet
+
+    def spy(self, *paths):
+        seen.append(paths)
+        return original(self, *paths)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    df = _read_probed_partitions(spark, path, "bucket", probes, "id long, bucket int")
+    rows = {(r.id, r.bucket) for r in df.select("id", "bucket").collect()}
+    return rows, seen, df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "case, probes",
+    [
+        ("non-listable root", [3, 7, 150, 999]),
+        ("over half probed", list(range(120))),  # 120 of 200 buckets, <= 128 probes
+        ("over 128 probes", list(range(150)) + [5000]),
+    ],
+)
+def test_probed_read_fallbacks_equal_filtered_full_read(spark, monkeypatch, wide_index,
+                                                        case, probes):
+    """Each fallback of _read_probed_partitions (full read + isin, full
+    read + broadcast semi-join) returns exactly the full read filtered by
+    key in probes, and the branch taken is the one named."""
+    path, everything = wide_index
+    root = "file://" + path if case == "non-listable root" else path
+    got, seen, plan = _probed_read(spark, monkeypatch, root, probes)
+    assert got == {(i, b) for i, b in everything if b in set(probes)} and got
+    assert seen == [(root,)], seen  # one full read, no per-directory paths
+    assert ("LeftSemi" in plan) == (len(probes) > 128), plan
+
+
+def test_probed_read_subset_lists_only_hits(spark, monkeypatch, wide_index):
+    """Under the thresholds the reader gets only the probed directories."""
+    path, everything = wide_index
+    got, seen, _ = _probed_read(spark, monkeypatch, path, [4, 9, 4000])
+    assert got == {(i, b) for i, b in everything if b in (4, 9)}
+    assert [sorted(p.rsplit("/", 1)[1] for p in seen[0])] == [["bucket=4", "bucket=9"]]
+
+
 def test_lsh_multiprobe2_superset(spark, lsh_path, qvecs):
     meta = read_ann_meta(lsh_path)
     p1 = set(lsh_probe_buckets(qvecs, meta, multiprobe_bits=1))

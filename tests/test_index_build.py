@@ -230,6 +230,58 @@ def test_driver_merge_equals_window_merge(spark, corpus, tmp_path):
         _wand.DRIVER_MERGE_MAX_ROWS = old
 
 
+def test_retrieve_local_pandas_distributed_terms_identical(spark, corpus, tmp_path):
+    """retrieve reads local query terms by collect, a pandas frame as is,
+    and any other frame by toPandas: the rows must not depend on which."""
+    _, w, scale = corpus
+    path = str(tmp_path / "idx_qt")
+    build_index(w, path, scale, num_shards=4)
+    postings = load_postings(spark, path).cache()
+    local = query_term_freqs(queries_df(spark))
+    dist = query_term_freqs(queries_df(spark).repartition(2))
+    assert local.isLocal() and not dist.isLocal()
+    key = lambda r: (r.query_id, r.rank, r.doc_id, r.score)  # noqa: E731
+    for merge in ("driver", "window"):
+        runs = [
+            sorted(map(key, retrieve(postings, qt, scale, k=10, num_shards=4,
+                                     merge=merge).collect()))
+            for qt in (local, local.toPandas(), dist)
+        ]
+        assert runs[0] and runs[0] == runs[1] == runs[2]
+    postings.unpersist()
+
+
+def test_warm_serving_call_runs_one_job(spark, corpus, tmp_path, spark_jobs):
+    """A warm single-query call — query_term_freqs on a pandas-built frame,
+    retrieve on prepare_serving postings with the driver merge, collect —
+    runs exactly one Spark job (the kernel stage), whether the query
+    scores, is out of vocabulary, or tokenizes to nothing."""
+    import pandas as pd
+
+    from splade_spark.query.wand import prepare_serving
+
+    _, w, scale = corpus
+    path = str(tmp_path / "idx_warm")
+    build_index(w, path, scale, num_shards=4)
+    postings = load_postings(spark, path)
+    serving = prepare_serving(postings, 4).cache()
+    serving.count()
+    normal = queries_df(spark).toPandas()["text"].iloc[0]
+
+    def call(text):
+        q = spark.createDataFrame(pd.DataFrame({"query_id": ["q"], "text": [text]}))
+        res = retrieve(serving, query_term_freqs(q), scale, k=10, num_shards=4,
+                       merge="driver", prepartitioned=True)
+        return res.collect()
+
+    for text, scores in ((normal, True), ("zzzunknownterm", False), ("!!! ???", False)):
+        call(text)  # warm
+        rows, jobs = spark_jobs(lambda: call(text))
+        assert jobs == 1, (text, jobs)
+        assert bool(rows) == scores
+    serving.unpersist()
+
+
 def test_explicit_driver_merge_guarded(spark, corpus, tmp_path):
     """merge='driver' honors the auto-mode collect bound: a batch whose
     n_queries x k x num_shards exceeds DRIVER_MERGE_MAX_ROWS raises, with

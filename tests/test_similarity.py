@@ -142,6 +142,41 @@ def test_harness_capped_entry_exercises_both_branches(spark):
     assert (sizes <= 30).any() and (sizes > 30).any()
 
 
+def _final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan AQE ran
+    return plan.toString()
+
+
+def test_capped_near_dup_runs_signature_kernel_once(spark):
+    """The capped path reads one bucket exchange in every branch (small
+    buckets' all-pairs, big buckets' members and representatives), so the
+    signature kernel runs once; its pairs equal a pandas replay of the
+    cap semantics over the same signatures (harness shape, both
+    branches taken)."""
+    emb01 = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    pairs = cosine_near_dup_pairs(emb01, tau=0.35, nbits=4, dim=64, max_bucket_size=30)
+    got = {(r.id_a, r.id_b): r.cosine for r in pairs.collect()}
+    assert _final_plan(pairs).count("MapInPandas") == 1
+
+    sig = hyperplane_signatures(emb01, nbits=4, dim=64).toPandas()
+    vec = {i: np.asarray(v, dtype=np.float64) for i, v in zip(sig["vec_id"], sig["embedding"])}
+    want = {}
+    for _, g in sig.groupby("bucket"):
+        ids = sorted(g["vec_id"].tolist())
+        if len(ids) <= 30:
+            cand = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+        else:
+            cand = [(ids[0], b) for b in ids[1:]]
+        for a, b in cand:
+            c = vec[a] @ vec[b] / np.sqrt((vec[a] @ vec[a]) * (vec[b] @ vec[b]))
+            if c >= 0.35:
+                want[(a, b)] = c
+    assert got.keys() == want.keys() and len(got) > 0
+    assert all(abs(got[p] - want[p]) < 1e-9 for p in got)
+
+
 def test_near_dup_bucket_cap_preserves_small_bucket_semantics(spark):
     """Buckets under the cap keep exact all-pairs semantics: with a cap
     larger than any bucket, results are identical to the uncapped path."""

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -58,6 +59,59 @@ def test_doc_id_layout_invariant(spark):
     wrong = frame.withColumn("_pid", 1 - F.spark_partition_id())
     with pytest.raises(Exception, match="assign_doc_ids: monotonically_increasing_id"):
         _attach_doc_ids(wrong, offsets).collect()
+
+
+_QTF_TEXTS = [
+    ("qnull", None),
+    ("qempty", ""),
+    ("qpunct", "!!! ... ???"),
+    ("qdup", "Spark spark SPARK index"),
+    ("qtwo", "first row"),
+    ("qtwo", "second row"),
+    ("qutf", "Straße İstanbul \u212aelvin"),
+]
+
+
+@pytest.mark.parametrize(
+    "rows, ddl, expect",
+    [
+        (
+            _QTF_TEXTS,
+            "query_id string, text string",
+            # qtwo: two rows sharing a query_id merge into one vector
+            {("qdup", "spark"): 3, ("qdup", "index"): 1, ("qtwo", "row"): 2},
+        ),
+        ([(i, t) for i, (_, t) in enumerate(_QTF_TEXTS)], "query_id int, text string", {}),
+        ([("a", ""), ("b", "!!!"), ("c", None)], "query_id string, text string", {}),
+    ],
+    ids=["mixed", "int-id", "all-empty"],
+)
+def test_query_term_freqs_local_equals_distributed(spark, rows, ddl, expect):
+    """A driver-local query frame is reduced on the driver; the result must
+    equal the explode + groupBy reducer's on the same rows spread over two
+    partitions: same schema, same rows, and again a local frame."""
+    local = spark.createDataFrame(pd.DataFrame(rows, columns=["query_id", "text"]), ddl)
+    dist = local.repartition(2)
+    assert local.isLocal() and not dist.isLocal()
+    got, want = query_term_freqs(local), query_term_freqs(dist)
+    assert got.isLocal()
+    assert got.schema == want.schema
+    assert got.columns == ["query_id", "term", "qtf", "term_id"]
+    rows_got = sorted(got.collect())
+    assert rows_got == sorted(want.collect())
+    qtf = {(r.query_id, r.term): r.qtf for r in rows_got}
+    assert {key: qtf.get(key) for key in expect} == expect
+    assert not any(q in ("qnull", "qempty", "qpunct") for q, _ in qtf)
+
+
+@pytest.mark.parametrize("text", ["hello hello world", "!!! ???"])
+def test_local_query_term_freqs_runs_no_job(spark, spark_jobs, text):
+    pdf = pd.DataFrame({"query_id": ["q"], "text": [text]})
+    rows, jobs = spark_jobs(
+        lambda: query_term_freqs(spark.createDataFrame(pdf)).collect()
+    )
+    assert jobs == 0
+    assert len(rows) == (2 if text[0] == "h" else 0)
 
 
 def test_bm25_weights_hand_computed(spark):
